@@ -104,6 +104,11 @@ _BASIS = np.array(
 # two standard tables for every 32-block frame (r19, guide §4.5).
 _CANON_CACHE: dict[bytes, dict[int, tuple[int, int]]] = {}
 
+# Entry cap for the module-level spec caches: a long-lived worker fed
+# files with many distinct tables or dimensions clears a cache once it
+# holds this many entries, so its memory stays bounded.
+_CACHE_MAX_ENTRIES = 64
+
 
 def _canonical_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
     """symbol → (code, length) via the canonical algorithm of T.81 §C."""
@@ -119,6 +124,8 @@ def _canonical_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, i
             code += 1
             k += 1
         code <<= 1
+    if len(_CANON_CACHE) >= _CACHE_MAX_ENTRIES:
+        _CANON_CACHE.clear()
     _CANON_CACHE[key] = codes
     return codes
 
@@ -237,10 +244,9 @@ def _pack_puts(values: np.ndarray, lengths: np.ndarray) -> bytes:
 
 
 # Dense-array form of a canonical-code dict, cached per dict object.
-# Keyed by id() with the dict itself held in the value: _CANON_CACHE
-# keeps one immutable dict per spec alive forever, so the id can never
-# be reused while the entry exists, and an ad-hoc (non-cached) dict
-# still hits the `is` guard before being trusted.
+# Keyed by id() with the dict itself held in the value, so the id can
+# never be reused while the entry exists, and an ad-hoc (non-cached)
+# dict still hits the `is` guard before being trusted.
 _CODE_ARRAYS_CACHE: dict[int, tuple[dict, np.ndarray, np.ndarray]] = {}
 
 
@@ -257,6 +263,8 @@ def _code_arrays(codes: dict[int, tuple[int, int]]) -> tuple[np.ndarray, np.ndar
     for sym, (c, ln) in codes.items():
         cv[sym] = c
         cl[sym] = ln
+    if len(_CODE_ARRAYS_CACHE) >= _CACHE_MAX_ENTRIES:
+        _CODE_ARRAYS_CACHE.clear()
     _CODE_ARRAYS_CACHE[id(codes)] = (codes, cv, cl)
     return cv, cl
 
@@ -436,6 +444,8 @@ def encode_jpeg_gray(
             hdr += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
         hdr += b"\xff\xda" + struct.pack(">HB", 8, 1) + b"\x01\x00\x00\x3f\x00"
         head = bytes(hdr)
+        if len(_GRAY_HDR_CACHE) >= _CACHE_MAX_ENTRIES:
+            _GRAY_HDR_CACHE.clear()
         _GRAY_HDR_CACHE[hkey] = head
     return head + bytes(entropy) + b"\xff\xd9"
 
@@ -1247,15 +1257,20 @@ def _enc_ac_refine(zq_all, ss: int, se: int, al: int, ac_codes) -> bytes:
     return bw.flush()
 
 
+_SCAN_TRUNCATED = "progressive scan data truncated"
+
+
 class _ScanBits:
     """Bit reader over one scan's unstuffed entropy bytes, computing
     each 16-bit window at read time from the byte buffer. The symbol
     walk touches roughly one window per five bit positions, so on-
     demand reads beat materializing every window through the numpy
     unpack/stride/matmul pipeline — the old precompute was ~20% of the
-    progressive leg (r19, guide §4.2). Windows are zero-filled past the
-    scan end exactly like the old padded window list (same readable
-    length ``n``)."""
+    progressive leg (r19, guide §4.2). ``n`` is the scan's bit length:
+    the byte buffer is zero-padded so a 16-bit window near the end can
+    be formed, but a read that would consume a bit at or past ``n``
+    raises ``ValueError`` — a truncated scan fails instead of decoding
+    phantom symbols from the padding."""
 
     __slots__ = ("b", "n", "p")
 
@@ -1264,8 +1279,8 @@ class _ScanBits:
         # data every 0xFF is stuffed (a bare 0xFF is a marker, and
         # ``end`` already stops before the first one)
         clean = bytes(payload[start:end]).replace(b"\xff\x00", b"\xff")
-        self.b = clean + b"\x00\x00\x00\x00\x00"
-        self.n = 8 * len(clean) + 17
+        self.b = clean + b"\x00\x00\x00"
+        self.n = 8 * len(clean)
         self.p = 0
 
     def huff(self, sym: list[int], ln: list[int]) -> int:
@@ -1277,7 +1292,10 @@ class _ScanBits:
         s = sym[code]
         if s < 0:
             raise ValueError("invalid Huffman code")
-        self.p = p + ln[code]
+        p += ln[code]
+        if p > self.n:
+            raise ValueError(_SCAN_TRUNCATED)
+        self.p = p
         return s
 
     def receive(self, n: int) -> int:
@@ -1288,24 +1306,27 @@ class _ScanBits:
         window = (
             ((b[q] << 16) | (b[q + 1] << 8) | b[q + 2]) >> (8 - (p & 7))
         ) & 0xFFFF
+        if p + n > self.n:
+            raise ValueError(_SCAN_TRUNCATED)
         self.p = p + n
         return window >> (16 - n)
 
     def bit(self) -> int:
         p = self.p
+        if p >= self.n:
+            raise ValueError(_SCAN_TRUNCATED)
         self.p = p + 1
         return (self.b[p >> 3] >> (7 - (p & 7))) & 1
 
     def take_bits(self, count: int) -> np.ndarray:
         """The next ``count`` single bits as an int64 vector (the DC-
-        refinement bulk read). Truncates at the readable length exactly
-        like slicing the old precomputed window list did."""
+        refinement bulk read)."""
         p = self.p
-        m = max(0, min(count, self.n - p))
-        a = np.frombuffer(self.b, np.uint8, (p + m + 7) >> 3)
-        bits = np.unpackbits(a)[p : p + m].astype(np.int64)
-        self.p = p + m if m < count else p + count
-        return bits
+        if p + count > self.n:
+            raise ValueError(_SCAN_TRUNCATED)
+        self.p = p + count
+        a = np.frombuffer(self.b, np.uint8, (p + count + 7) >> 3)
+        return np.unpackbits(a)[p : p + count].astype(np.int64)
 
 
 def _scan_end(payload: bytes, pos: int) -> int:
@@ -1407,9 +1428,7 @@ def _decode_progressive(payload: bytes) -> np.ndarray:
                     # DC refinement reads exactly one bit per block, in
                     # block order — read them all in one vectorized
                     # bulk read instead of nb Python round-trips
-                    # through br.bit() (r18; identical bits, zero-
-                    # padded past the scan end like the old window
-                    # list).
+                    # through br.bit() (r18; identical bits).
                     coef[:, 0] |= br.take_bits(coef.shape[0]) << al
             else:
                 ac_sym, ac_ln = _build_lut_lists(*huff[(1, tids & 0x0F)])

@@ -276,25 +276,14 @@ def _staging_state(out_dir: str) -> tuple[str, int, int]:
     try:
         with open(f"{out_dir}/staging_meta.json") as fh:
             meta = json.load(fh)
-        gen, offset = int(meta["generation"]), int(meta["offset"])
-        if "closed_hour" not in meta and offset > 0:
-            # A pre-closed_hour marker that has already swept compacted
-            # bins (offset > 0) has lost those bins' hour coverage:
-            # neither the meta watermark nor live staging can attest
-            # the boundary, so a late row mapping to a done group_id
-            # would be written nowhere and silently dropped by the next
-            # sweep — the exact loss mode the quarantine exists to
-            # prevent. Hard-error like state_compaction's legacy-layout
-            # policy; the operator backfills closed_hour from the
-            # compacted dir's per-done-group max hour out-of-band.
+        if "closed_hour" not in meta:
+            # _commit_staging_state always writes it; defaulting the
+            # late-data guard off would silently drop late rows
             raise RuntimeError(
-                f"legacy staging marker in {out_dir}: offset {offset} > 0 "
-                "but no closed_hour watermark — backfill closed_hour from "
-                "the compacted bins' max event-hour before restarting "
-                "(defaulting the late-data guard off would silently drop "
-                "late rows)"
+                f"malformed staging marker in {out_dir}: no closed_hour"
             )
-        closed = int(meta.get("closed_hour", _NO_CLOSED_HOUR))
+        gen, offset = int(meta["generation"]), int(meta["offset"])
+        closed = int(meta["closed_hour"])
     except FileNotFoundError:
         # only a genuinely-missing marker means a fresh gate. A
         # present-but-corrupt marker must PROPAGATE (ours is written

@@ -22,11 +22,12 @@ This module is the single API over all three:
   folded_through / batch_through / the batch id itself; None when a
   damaged or pre-protocol sidecar cannot attest one),
   ``state`` (sink-specific commit state: 'current'/'committed' for
-  the generation-keyed sinks, 'moved'/'committed'/'legacy' for the
-  manifest sink), and
+  the generation-keyed sinks, 'moved'/'committed' for the manifest
+  sink; each sink reads only the marker format its writer commits and
+  raises a named ``RuntimeError`` on any other), and
   ``servable`` (whether :func:`table_asof` will serve this version
-  NOW — the vacuum/retention/legacy rules each asof documents,
-  evaluated from the same markers it reads).
+  NOW — the vacuum/retention rules each asof documents, evaluated
+  from the same markers it reads).
 - :func:`table_asof` dispatches to the owning sink's asof reader, so
   callers get the sink's own NAMED not-servable errors unchanged.
 
@@ -119,23 +120,17 @@ def history(sink_dir: str) -> list[dict]:
         return out
     from . import hybrid_join as hj
 
-    out = []
-    legacy_below = False
-    for s in hj.fact_snapshots(sink_dir):
-        legacy_below = legacy_below or s["state"] == "legacy"
-        out.append(
-            {
-                "version": s["batch_id"],
-                "kind": "fact",
-                "watermark": s["batch_id"],
-                "state": s["state"],
-                # fact_table_asof serves the union of ALL manifests at
-                # or below the version, so one legacy (pre-manifest,
-                # non-enumerable) commit poisons every later version
-                "servable": not legacy_below,
-            }
-        )
-    return out
+    return [
+        {
+            "version": s["batch_id"],
+            "kind": "fact",
+            "watermark": s["batch_id"],
+            "state": s["state"],
+            # an OPTIMIZE-rewritten file is a read-time property
+            "servable": True,
+        }
+        for s in hj.fact_snapshots(sink_dir)
+    ]
 
 
 def table_asof(
@@ -143,7 +138,7 @@ def table_asof(
 ) -> DataFrame:
     """VERSION AS OF through one entry point: dispatches to the owning
     sink's asof reader, so the sink's own NAMED not-servable errors
-    (vacuumed generation, legacy manifest, OPTIMIZE-rewritten file)
+    (vacuumed generation, malformed marker, OPTIMIZE-rewritten file)
     surface unchanged."""
     kind = sink_kind(sink_dir)
     if kind == "zorder":

@@ -412,7 +412,8 @@ def _commit_manifest_marker(marker: str, staging: str) -> None:
     (the same generation-commit idiom as
     ``state_compaction``/``compaction_stream``). After this replace
     the batch IS committed — the moves in ``_reconcile_batch`` are
-    completable from the manifest by any later run."""
+    completable from the manifest by any later run. This ``"v": 2``
+    manifest is the only marker format the sink reads."""
     import json
 
     files = []
@@ -424,12 +425,12 @@ def _commit_manifest_marker(marker: str, staging: str) -> None:
             files.append(os.path.relpath(full, staging))
     tmp = marker + ".tmp"
     with open(tmp, "w") as fh:
-        # v2 (round 15): completion is recorded POSITIVELY — after the
-        # last move _reconcile_batch rewrites the marker with
-        # moved:true BEFORE removing the staging dir, so a debris-only
-        # staging dir without the flag is a provable crash state (all
-        # files must be in the sink), not an assumption, and an absent
-        # staging dir without the flag is provable out-of-band damage.
+        # completion is recorded POSITIVELY — after the last move
+        # _reconcile_batch rewrites the marker with moved:true BEFORE
+        # removing the staging dir, so a debris-only staging dir
+        # without the flag is a provable crash state (all files must
+        # be in the sink), and an absent staging dir without the flag
+        # is provable out-of-band damage.
         json.dump(
             {"v": 2, "staging": os.path.basename(staging), "files": files},
             fh,
@@ -437,44 +438,21 @@ def _commit_manifest_marker(marker: str, staging: str) -> None:
     os.replace(tmp, marker)
 
 
-def _mark_moved(marker: str, manifest: dict) -> None:
-    """Record that every manifest file reached the sink — the positive
-    completion flag (tmp-write + os.replace, same idiom as the commit
-    itself). Written BEFORE the staging rmtree, so the protocol's
-    states are totally ordered: no-flag+staged = mid-move,
-    no-flag+debris-only = crash before this write (every file must be
-    verifiable in the sink), flag = done (staging dir is pure debris
-    whatever it holds)."""
+def _read_manifest(marker: str) -> dict:
+    """The manifest a batch marker commits; anything else (empty,
+    truncated, no ``"v": 2``) is malformed and raises by name."""
     import json
 
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump({**manifest, "moved": True}, fh)
-    os.replace(tmp, marker)
-
-
-def _record_assumed_reconcile(output_dir: str, marker: str, n_files: int) -> None:
-    """Durable, reader-visible record of a LEGACY (v1) debris-only
-    reconcile — the one state where 'all moves completed in a previous
-    life' is assumed rather than proven (v2 markers prove it via the
-    moved flag or a sink-presence check). Appends to
-    ``_assumed_reconciles.json`` in the sink (underscore prefix:
-    invisible to parquet readers, carried across OPTIMIZE by
-    compact_parquet's bookkeeping copy), so an out-of-band deletion
-    would be traceable from the sink itself, not just a log line."""
-    import json
-
-    path = os.path.join(output_dir, "_assumed_reconciles.json")
     try:
-        with open(path) as fh:
-            records = json.load(fh)
-    except (FileNotFoundError, ValueError):
-        records = []
-    records.append({"marker": os.path.basename(marker), "files": n_files})
-    tmp = path + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(records, fh)
-    os.replace(tmp, path)
+        with open(marker) as fh:
+            manifest = json.load(fh)
+    except ValueError:
+        manifest = None
+    if not isinstance(manifest, dict) or manifest.get("v") != 2:
+        raise RuntimeError(
+            f"malformed fact batch marker {marker}: not a v2 manifest"
+        )
+    return manifest
 
 
 def _reconcile_batch(marker: str, output_dir: str) -> None:
@@ -483,100 +461,35 @@ def _reconcile_batch(marker: str, output_dir: str) -> None:
     atomic), so a file already moved is skipped and one still staged
     is moved; a manifest file found in NEITHER place is out-of-band
     damage and must propagate (treating it as done could silently drop
-    committed rows). Legacy empty markers (pre-manifest commits, and
-    the JDBC sink's) have no manifest — nothing to reconcile.
+    committed rows).
 
-    v2 protocol (round 15, closes the round-14 advice ambiguity):
-    completion is recorded positively — ``_mark_moved`` rewrites the
-    marker with moved:true after the last move and BEFORE the staging
-    rmtree. A flagged marker is done regardless of staging debris; an
-    un-flagged v2 marker with a debris-only staging dir must have
-    every manifest file verifiable in the sink (the only benign crash
-    point is between the last move and the flag write, and OPTIMIZE
-    cannot have renamed the files in that window because
-    compact_parquet reconciles pending markers first); an un-flagged
-    v2 marker whose staging dir is GONE is out-of-band damage. Legacy
-    v1 markers keep the old benign readings, but the debris-only
-    assumption is now recorded durably in the sink
-    (``_record_assumed_reconcile``), not just printed."""
+    Completion is recorded positively — the marker is rewritten with
+    moved:true (tmp-write + os.replace) after the last move and BEFORE
+    the staging rmtree. A flagged marker is done regardless of staging
+    debris; an un-flagged marker whose staging dir is GONE is
+    out-of-band damage (no crash point removes staging before the
+    flag). OPTIMIZE cannot have renamed the files of an un-flagged
+    batch, because compact_parquet reconciles pending markers first."""
     import json
     import shutil
 
-    try:
-        with open(marker) as fh:
-            manifest = json.load(fh)
-    except ValueError:
-        return  # legacy empty marker: data was written before it
+    manifest = _read_manifest(marker)
     staging = os.path.join(output_dir, "_staging", manifest["staging"])
     if manifest.get("moved"):
         # Positively complete: anything left under staging is debris
         # from a crash between the flag write and the rmtree.
-        if os.path.isdir(staging):
-            shutil.rmtree(staging, ignore_errors=True)
-        return
-    v2 = manifest.get("v", 1) >= 2
-    if not os.path.isdir(staging):
-        if v2:
-            # v2 removes staging only AFTER the flag write, so this
-            # state is unreachable by any crash point of the protocol.
-            raise RuntimeError(
-                f"committed batch {os.path.basename(marker)} has no "
-                "moved flag and no staging dir — the staging dir was "
-                "removed out-of-band before completion was recorded; "
-                "its rows may be missing from the sink. Recover from "
-                "the source (replay the batch's input with a fresh "
-                "checkpoint) or, if the rows are verified present, "
-                "rewrite the marker with moved:true."
-            )
-        # v1 removed staging only after every move completed — proof
-        # of completion under the old protocol.
-        return
-    staged_files = [
-        rel
-        for rel in manifest["files"]
-        if os.path.exists(os.path.join(staging, rel))
-    ]
-    if not staged_files:
-        # Debris-only staging dir: a crash interrupted the flag write
-        # or the rmtree after all moves completed.
-        in_sink = [
-            rel
-            for rel in manifest["files"]
-            if os.path.exists(os.path.join(output_dir, rel))
-        ]
-        missing = [r for r in manifest["files"] if r not in set(in_sink)]
-        if v2 and missing:
-            # Under v2 every benign crash leaves all files in the sink
-            # (OPTIMIZE reconciles-then-flags before renaming), so a
-            # missing file here is an out-of-band deletion of
-            # committed rows — the exact loss the round-14 advice said
-            # must not hide behind a print.
-            raise RuntimeError(
-                f"committed batch {os.path.basename(marker)}: "
-                f"{len(missing)} manifest file(s) missing from both "
-                f"staging and sink (e.g. {missing[0]}) — out-of-band "
-                "damage, refusing to continue"
-            )
-        if missing:
-            # v1 only: OPTIMIZE may legitimately have renamed the
-            # files under the old protocol, which is indistinguishable
-            # from a deletion here. Keep the benign reading (the
-            # single-writer contract excludes tmp cleaners from
-            # _staging) but record it durably in the sink.
-            print(
-                f"run_stream reconcile: legacy marker "
-                f"{os.path.basename(marker)} has a debris-only staging "
-                f"dir — treating its {len(manifest['files'])} file(s) "
-                "as moved in a previous life (sink files may since "
-                "have been rewritten by OPTIMIZE); recording the "
-                "assumption in _assumed_reconciles.json"
-            )
-            _record_assumed_reconcile(
-                output_dir, marker, len(manifest["files"])
-            )
-        _mark_moved(marker, manifest)
         shutil.rmtree(staging, ignore_errors=True)
         return
+    if not os.path.isdir(staging):
+        raise RuntimeError(
+            f"committed batch {os.path.basename(marker)} has no "
+            "moved flag and no staging dir — the staging dir was "
+            "removed out-of-band before completion was recorded; "
+            "its rows may be missing from the sink. Recover from "
+            "the source (replay the batch's input with a fresh "
+            "checkpoint) or, if the rows are verified present, "
+            "rewrite the marker with moved:true."
+        )
     for rel in manifest["files"]:
         src = os.path.join(staging, rel)
         dst = os.path.join(output_dir, rel)
@@ -589,61 +502,57 @@ def _reconcile_batch(marker: str, output_dir: str) -> None:
                 f"sink: {rel} (marker {os.path.basename(marker)}) — "
                 "out-of-band damage, refusing to continue"
             )
-    _mark_moved(marker, manifest)
+    tmp = marker + ".tmp"
+    with open(tmp, "w") as fh:
+        json.dump({**manifest, "moved": True}, fh)
+    os.replace(tmp, marker)
     shutil.rmtree(staging, ignore_errors=True)
+
+
+def _markers(output_dir: str) -> dict[int, str]:
+    """Batch id → marker path of every ``_batch_<id>_committed``."""
+    try:
+        names = os.listdir(output_dir)
+    except FileNotFoundError:
+        return {}
+    return {
+        int(n[len("_batch_"):-len("_committed")]): os.path.join(output_dir, n)
+        for n in names
+        if n.startswith("_batch_") and n.endswith("_committed")
+    }
 
 
 def _reconcile_pending_batches(output_dir: str) -> None:
     """Startup pass: finish the moves of every committed manifest
     marker (a crash between marker commit and the moves leaves the
     batch's rows invisible to the reader until this runs)."""
-    try:
-        names = os.listdir(output_dir)
-    except FileNotFoundError:
-        return
-    for name in names:
-        if name.startswith("_batch_") and name.endswith("_committed"):
-            _reconcile_batch(os.path.join(output_dir, name), output_dir)
+    for marker in _markers(output_dir).values():
+        _reconcile_batch(marker, output_dir)
+
+
+def _manifests(output_dir: str) -> list[tuple[int, dict]]:
+    """(batch id, manifest) of every committed batch, oldest first."""
+    return [
+        (bid, _read_manifest(marker))
+        for bid, marker in sorted(_markers(output_dir).items())
+    ]
 
 
 def fact_snapshots(output_dir: str) -> list[dict]:
-    """DESCRIBE HISTORY for the parquet fact sink (round-16 verdict
-    item 4 generalized to the third sink): one row per committed batch
-    marker, oldest first — {batch_id, n_files, state}. ``state`` is
-    'moved' (positively complete), 'committed' (manifest committed,
-    moves possibly pending — still a valid version: reconcile
-    completes it), or 'legacy' (pre-manifest v1 empty marker: the
-    batch's rows are in the sink but not enumerable, so time travel
-    through it is not servable)."""
-    import json
-
-    out: list[dict] = []
-    try:
-        names = os.listdir(output_dir)
-    except FileNotFoundError:
-        return out
-    for name in sorted(names):
-        if not (name.startswith("_batch_") and name.endswith("_committed")):
-            continue
-        try:
-            bid = int(name[len("_batch_"):-len("_committed")])
-        except ValueError:
-            continue
-        try:
-            with open(os.path.join(output_dir, name)) as fh:
-                manifest = json.load(fh)
-        except ValueError:
-            out.append({"batch_id": bid, "n_files": None, "state": "legacy"})
-            continue
-        out.append(
-            {
-                "batch_id": bid,
-                "n_files": len(manifest.get("files", [])),
-                "state": "moved" if manifest.get("moved") else "committed",
-            }
-        )
-    out.sort(key=lambda r: r["batch_id"])
-    return out
+    """DESCRIBE HISTORY for the parquet fact sink: one row per
+    committed batch marker, oldest first — {batch_id, n_files, state}.
+    ``state`` is 'moved' (positively complete) or 'committed'
+    (manifest committed, moves possibly pending — still a valid
+    version: reconcile completes it). A marker that is not a v2
+    manifest raises (``_read_manifest``)."""
+    return [
+        {
+            "batch_id": bid,
+            "n_files": len(m["files"]),
+            "state": "moved" if m.get("moved") else "committed",
+        }
+        for bid, m in _manifests(output_dir)
+    ]
 
 
 def fact_table_asof(
@@ -656,44 +565,30 @@ def fact_table_asof(
     files are never rewritten in place) and the manifest IS the commit
     (one os.replace). Pending moves are reconciled first, so every
     served file sits in the sink. Not servable — with a NAMED error
-    listing what is — when the requested id was never committed, a
-    covered marker is a pre-manifest legacy one, or OPTIMIZE
-    (``compact_parquet``) has since rewritten a manifest file: exactly
-    the history-breaks-past-the-retention-boundary contract of the
-    other two sinks."""
+    listing what is — when the requested id was never committed or
+    OPTIMIZE (``compact_parquet``) has since rewritten a manifest
+    file: exactly the history-breaks-past-the-retention-boundary
+    contract of the other two sinks. A marker that is not a v2
+    manifest raises (``_read_manifest``)."""
     _reconcile_pending_batches(output_dir)
-    snaps = fact_snapshots(output_dir)
-    have = [s["batch_id"] for s in snaps if s["state"] != "legacy"]
-    cover = [s for s in snaps if s["batch_id"] <= int(batch_id)]
-    if not cover or int(batch_id) not in {s["batch_id"] for s in snaps}:
+    manifests = _manifests(output_dir)
+    have = [bid for bid, _m in manifests]
+    if int(batch_id) not in have:
         raise RuntimeError(
             f"batch {batch_id} of {output_dir} is not servable "
             f"(committed batches on disk: {have}) — it was never "
             "committed; time travel serves only committed batch ids"
         )
-    legacy = [s["batch_id"] for s in cover if s["state"] == "legacy"]
-    if legacy:
-        raise RuntimeError(
-            f"batch {batch_id} of {output_dir} is not servable: "
-            f"covered marker(s) {legacy} are pre-manifest legacy "
-            "commits whose files are not enumerable — time travel "
-            "starts at the first manifest-protocol commit"
-        )
-    import json
-
     paths: list[str] = []
-    for s in cover:
-        marker = os.path.join(
-            output_dir, f"_batch_{s['batch_id']}_committed"
-        )
-        with open(marker) as fh:
-            manifest = json.load(fh)
-        for rel in manifest.get("files", []):
+    for bid, m in manifests:
+        if bid > int(batch_id):
+            break
+        for rel in m["files"]:
             full = os.path.join(output_dir, rel)
             if not os.path.exists(full):
                 raise RuntimeError(
                     f"batch {batch_id} of {output_dir} is not servable:"
-                    f" manifest file {rel} of batch {s['batch_id']} is "
+                    f" manifest file {rel} of batch {bid} is "
                     "no longer in the sink (rewritten by OPTIMIZE or "
                     "removed out-of-band) — time travel is valid only "
                     "until compaction rewrites a covered batch, exactly"

@@ -160,17 +160,20 @@ def _pin_key(out_dir: str, key: str, params: dict | None = None) -> None:
     path = _key_path(out_dir)
     try:
         with open(path) as fh:
-            raw = fh.read().strip()
+            pinned = json.load(fh)
     except FileNotFoundError:
         tmp = path + ".tmp"
         with open(tmp, "w") as fh:
             json.dump(want, fh)
         os.replace(tmp, path)
         return
-    try:
-        pinned = json.loads(raw)
     except ValueError:
-        pinned = {"key": raw, "params": None}  # pre-r16 plain-text pin
+        pinned = None
+    if not isinstance(pinned, dict):
+        raise RuntimeError(
+            f"malformed layout-key pin {path}: not the JSON {{key, "
+            "params}} object this gate writes — refusing to guess"
+        )
     # a domain re-pin commits its new params INSIDE the marker (the
     # single atomic commit); the pin file is repaired lazily here, so
     # a crash between the marker replace and the pin rewrite can never
@@ -250,7 +253,6 @@ def _staged(spark: SparkSession, staging_dir: str, folded_through: int) -> DataF
 def clustered_table(spark: SparkSession, out_dir: str) -> DataFrame:
     """The reader's view: committed base generation + unfolded staged
     rows (the delta a table-format reader merges from the log)."""
-    _recover_sweep(out_dir)
     gen, folded = _gen_state(out_dir)
     staging = os.path.join(out_dir, "staging")
     parts = []
@@ -271,9 +273,10 @@ def clustered_table(spark: SparkSession, out_dir: str) -> DataFrame:
 def snapshots(out_dir: str) -> list[dict]:
     """DESCRIBE HISTORY for the clustered table: every generation still
     on disk with its folded_through watermark, oldest first. A
-    generation without a snapshot sidecar (pre-r16 fold, or the marker
-    names it but the sidecar was damaged) reports folded_through=None
-    rather than guessing. The CURRENT generation is always last."""
+    generation whose snapshot sidecar is missing or damaged (every
+    fold writes one, so either is out-of-band damage) reports
+    folded_through=None rather than guessing. The CURRENT generation
+    is always last."""
     root = os.path.join(out_dir, "clustered")
     out: list[dict] = []
     if not os.path.isdir(root):
@@ -291,7 +294,7 @@ def snapshots(out_dir: str) -> list[dict]:
             with open(os.path.join(root, name, "_snapshot.json")) as fh:
                 meta = json.load(fh)
         except (FileNotFoundError, ValueError):
-            # absent (pre-r16 fold) OR damaged/truncated sidecar — both
+            # absent OR damaged/truncated sidecar — both
             # degrade to folded_through=None as documented (round-16
             # advice: a raw JSONDecodeError here also crashed
             # clustered_table_asof's not-servable error path, which
@@ -300,9 +303,9 @@ def snapshots(out_dir: str) -> list[dict]:
         folded = meta.get("folded_through") if isinstance(meta, dict) else None
         if g == cur_gen and folded is None:
             folded = cur_folded  # the marker attests the current gen
-        # the drift trail (scaled sinks, r18+ commits): cumulative
+        # the drift trail (scaled sinks): cumulative
         # clamp ppm at this commit, plus this fold's own sample — None
-        # on non-scaled sinks and pre-trail generations
+        # on non-scaled sinks
         cum = meta.get("clamp") if isinstance(meta, dict) else None
         cum_ppm = (
             (1_000_000 * int(cum["n_clamped"])) // int(cum["n_rows"])
@@ -357,19 +360,24 @@ def _fold(spark: SparkSession, out_dir: str, token=None) -> None:
     immediately before that replace (commit-granularity fencing —
     round-16 advice: batch-start verification alone left the whole
     fold as a zombie-write window)."""
-    _recover_sweep(out_dir)
-    staging = os.path.join(out_dir, "staging")
-    if not os.path.isdir(staging):
-        return
     gen, folded = _gen_state(out_dir)
     prior_marker = _read_marker(out_dir) or {}
-    staged = _staged(spark, staging, folded)
     # Scaled sinks: clamp accounting rides the SAME aggregate that
     # sizes the fold (one extra map-side sum, no second pass), so every
     # commit records how much of the folded batch fell outside the
     # frozen domain — the drift trail a deployment alarms on without
     # ever calling the full-scan report (round-17 verdict item 2).
+    # Every scaled fold and re-pin commits that trail.
     scaled_p = _scaled_params_or_none(out_dir)
+    if scaled_p is not None and gen >= 0 and "clamp" not in prior_marker:
+        raise RuntimeError(
+            f"malformed z-order generation marker {_marker_path(out_dir)}"
+            f": scaled generation {gen} carries no clamp trail"
+        )
+    staging = os.path.join(out_dir, "staging")
+    if not os.path.isdir(staging):
+        return
+    staged = _staged(spark, staging, folded)
     aggs = [F.count(F.lit(1)), F.max("batch_id")]
     if scaled_p is not None:
         aggs.append(F.sum(_clamp_expr(scaled_p).cast("long")))
@@ -437,21 +445,7 @@ def _fold(spark: SparkSession, out_dir: str, token=None) -> None:
     fold_clamp = None
     if scaled_p is not None:
         c_new = int(agg[2] or 0)
-        prior_clamp = prior_marker.get("clamp")
-        if prior_clamp is None and gen >= 0:
-            # upgrade backfill, paid ONCE per sink: a pre-trail marker
-            # means the committed base's rows were folded without clamp
-            # accounting — seed the cumulative pair from one aggregate
-            # over the base so the trail stays table-exact from here on
-            b = spark.read.parquet(_base_dir(out_dir, gen)).agg(
-                F.count(F.lit(1)),
-                F.sum(_clamp_expr(scaled_p).cast("long")),
-            ).collect()[0]
-            prior_clamp = {
-                "n_rows": int(b[0] or 0),
-                "n_clamped": int(b[1] or 0),
-            }
-        prior_clamp = prior_clamp or {}
+        prior_clamp = prior_marker.get("clamp", {})
         marker["clamp"] = {
             "n_rows": int(prior_clamp.get("n_rows", 0)) + n_new,
             "n_clamped": int(prior_clamp.get("n_clamped", 0)) + c_new,
@@ -482,21 +476,6 @@ def _fold(spark: SparkSession, out_dir: str, token=None) -> None:
         token.verify_and_renew()  # re-verify at the commit point
     os.replace(tmp, _marker_path(out_dir))  # the commit point
     spark.catalog.refreshByPath(new_base)
-
-
-def _recover_sweep(out_dir: str) -> None:
-    """Legacy-state recovery: the pre-r16 sweep swapped the live
-    staging dir through a two-rename (staging → .old, .next →
-    staging), so a crash between them left the survivors invisible in
-    ``staging.next``. The current sweep never renames the live dir
-    (see ``sweep_staging``), so this only fires on a disk state
-    written by that older code. Kept at every staging consumer: two
-    isdir checks when there is nothing to recover."""
-    staging = os.path.join(out_dir, "staging")
-    nxt = staging + ".next"
-    if not os.path.isdir(staging) and os.path.isdir(nxt):
-        os.rename(nxt, staging)
-    shutil.rmtree(staging + ".old", ignore_errors=True)
 
 
 def _staging_files(staging: str) -> list[str]:
@@ -558,7 +537,6 @@ def sweep_staging(
     servable through ``clustered_table_asof`` (hardlink carries mean a
     retained old generation costs only its REWRITTEN buckets' bytes —
     carried files share inodes with the current base)."""
-    _recover_sweep(out_dir)
     gen, folded = _gen_state(out_dir)
     staging = os.path.join(out_dir, "staging")
     if os.path.isdir(staging) and folded >= 0:
@@ -697,8 +675,8 @@ def repin_scaled_domain(
     # through a fold, so the cumulative pair is the exact table-level
     # clamp count under the current spec — no re-scan. The trail lags
     # the table by the unfolded staged backlog only (those rows are
-    # counted when their fold commits); a pre-trail sink (no r18 fold
-    # yet) falls back to the full-scan report.
+    # counted when their fold commits); a sink with no fold committed
+    # yet falls back to the full-scan report.
     trail = (_read_marker(out_dir) or {}).get("clamp")
     if isinstance(trail, dict) and int(trail.get("n_rows", 0) or 0):
         n, c = int(trail["n_rows"]), int(trail["n_clamped"])
@@ -726,15 +704,9 @@ def repin_scaled_domain(
         # fresh drift history whose row total is the whole re-keyed
         # table (all in-domain by construction — scaled_domain measured
         # it), so cumulative ppm stays table-exact across the re-pin.
-        # Post-fold, the trail's n_rows IS the table row count; a
-        # pre-trail sink pays one count.
-        folded_trail = (_read_marker(out_dir) or {}).get("clamp")
-        n_table = (
-            int(folded_trail["n_rows"])
-            if isinstance(folded_trail, dict)
-            and int(folded_trail.get("n_rows", 0) or 0)
-            else base.count()
-        )
+        # Post-fold (which checked the marker carries the trail), the
+        # trail's n_rows IS the table row count.
+        n_table = int(_read_marker(out_dir)["clamp"]["n_rows"])
         reset_clamp = {"n_rows": n_table, "n_clamped": 0}
         new_params = scaled_domain(base)
         new_gen = gen + 1
@@ -840,7 +812,6 @@ def run_zorder_stream(
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         token.verify_and_renew()  # fail the batch, never zombie-write
-        _recover_sweep(out_dir)
         (
             _bucketed(batch_df, key, params)
             .withColumn("batch_id", F.lit(int(batch_id)).cast("long"))

@@ -555,6 +555,53 @@ def test_second_fact_pipeline_is_fenced(spark, dims, workdir):
     assert spark.read.parquet(out).count() == n1
 
 
+def test_optimize_is_fenced_by_a_live_stream(spark, dims, workdir):
+    """OPTIMIZE takes the sink's writer token: against a continuous
+    run_stream it raises WriterFencedError and leaves the sink exactly
+    as it was (a swap under a live writer would delete the batches it
+    commits into the old directory)."""
+    from near_real_time_data_warehouse_with_hybridjoin_for_retail_analytics_spark.etl.compact import (
+        compact_parquet,
+    )
+    from near_real_time_data_warehouse_with_hybridjoin_for_retail_analytics_spark.streaming.fencing import (
+        WriterFencedError,
+    )
+
+    cust, prod = dims
+    input_dir = workdir / "opt_fence_in"
+    input_dir.mkdir()
+    for i in range(2):
+        (input_dir / f"p{i}.csv").write_text(CSV_MAIN)
+    out = workdir / "opt_fence_sales"
+    q = hj.run_stream(
+        spark, str(input_dir),
+        "orderID string, Customer_ID string, Product_ID string, "
+        "quantity string, date string",
+        cust, prod,
+        output_dir=str(out), checkpoint_dir=str(workdir / "opt_fence_ck"),
+        max_files_per_trigger=1, available_now=False,
+    )
+
+    def tree():
+        return {
+            str(p.relative_to(workdir)): p.read_bytes()
+            for p in workdir.rglob("*")
+            if p.is_file() and p.parts[len(workdir.parts)].startswith("opt_fence_sales")
+        }
+
+    try:
+        q.processAllAvailable()
+        before = tree()
+        assert any(k.endswith(".parquet") for k in before)
+        with pytest.raises(WriterFencedError, match="owned by writer"):
+            compact_parquet(spark, str(out), sort_within_by=["date_id"])
+        assert q.isActive
+        assert tree() == before
+    finally:
+        q.stop()
+        q.writer_token.release()
+
+
 def test_fact_time_travel_on_batch_boundaries(spark, dims, tmp_path):
     """Round-17: VERSION AS OF on the parquet fact sink — each batch
     marker's manifest is a commit boundary; asof(b) serves exactly the

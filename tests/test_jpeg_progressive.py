@@ -132,3 +132,34 @@ def test_arbitrary_scan_scripts_match_baseline():
         jpeg.encode_jpeg_progressive_gray(img, quant=q, scans=[(0, 63, 0, 0)])
     with pytest.raises(ValueError):
         jpeg.encode_jpeg_progressive_gray(img, quant=q, scans=[(0, 0, 2, 0)])
+
+
+def test_truncated_scan_raises_instead_of_decoding_padding():
+    """Every strict prefix of every scan's entropy data (re-stuffed, with
+    the rest of the stream intact) either raises ValueError or decodes
+    to exactly the full image — a short scan never yields phantom
+    symbols read from past its end."""
+    img = np.full((16, 24), 128, np.uint8)
+    img[::5, ::3] = 255
+    img[3:9, 10:20] = 40
+    payload = jpeg.encode_jpeg_progressive_gray(img, np.full((8, 8), 4, np.int64))
+    full = jpeg.decode_jpeg(payload)
+    scans, pos = [], payload.index(b"\xff\xda")
+    while pos >= 0:
+        start = pos + 2 + int.from_bytes(payload[pos + 2 : pos + 4], "big")
+        end = jpeg._scan_end(payload, start)
+        scans.append((start, end))
+        pos = payload.find(b"\xff\xda", end)
+    assert len(scans) > 3
+    raised = 0
+    for start, end in scans:
+        data = payload[start:end].replace(b"\xff\x00", b"\xff")
+        for k in range(len(data)):
+            cut = data[:k].replace(b"\xff", b"\xff\x00")
+            try:
+                got = jpeg.decode_jpeg(payload[:start] + cut + payload[end:])
+            except ValueError:
+                raised += 1
+                continue
+            assert np.array_equal(got, full), (start, k)
+    assert raised > 0

@@ -188,38 +188,6 @@ def test_v2_unflagged_missing_staging_dir_raises(tmp_path):
         hj._reconcile_batch(str(marker), str(out))
 
 
-def test_v1_legacy_debris_only_assumption_recorded_durably(tmp_path):
-    """Legacy (v1) markers keep the benign reading — OPTIMIZE may have
-    renamed the sink files under the old protocol — but the assumption
-    is recorded in the sink itself, so a real loss is traceable from a
-    reader-visible artifact, not just a log line (round-14 verdict
-    item 5)."""
-    out, marker, staging = _mk_sink(
-        tmp_path, ["a.parquet"], in_sink=[], staged=[], flag=False, v=None
-    )
-    hj._reconcile_batch(str(marker), str(out))
-    assert not staging.exists()
-    rec = json.loads((out / "_assumed_reconciles.json").read_text())
-    assert rec == [{"marker": "_batch_0_committed", "files": 1}]
-    # flagged afterwards: the assumption is made (and recorded) ONCE
-    assert json.loads(marker.read_text())["moved"] is True
-    hj._reconcile_batch(str(marker), str(out))
-    rec2 = json.loads((out / "_assumed_reconciles.json").read_text())
-    assert rec2 == rec
-
-
-def test_v1_legacy_missing_staging_dir_stays_benign(tmp_path):
-    """v1 removed staging only after every move — absence proves
-    completion under the old protocol and must not start erroring."""
-    import shutil
-
-    out, marker, staging = _mk_sink(
-        tmp_path, ["a.parquet"], in_sink=[], staged=[], flag=False, v=None
-    )
-    shutil.rmtree(staging)
-    hj._reconcile_batch(str(marker), str(out))  # no raise
-
-
 def test_v2_mid_move_state_still_moves_and_flags(tmp_path):
     out, marker, staging = _mk_sink(
         tmp_path, ["a.parquet", "b.parquet"],

@@ -98,8 +98,7 @@ def test_unified_history_compaction(spark, tmp_path):
 
 def test_unified_history_fact(spark, tmp_path):
     """Batch-keyed manifest sink: one version per committed batch, all
-    servable; a legacy (pre-manifest) marker poisons itself and every
-    LATER version, exactly the dispatcher's asof rule."""
+    servable."""
     from test_etl_streaming import CSV_ALT, CSV_MAIN, CUSTOMERS, PRODUCTS
 
     cust = spark.createDataFrame(
@@ -140,17 +139,6 @@ def test_unified_history_fact(spark, tmp_path):
     )
     n1 = history.table_asof(spark, out, 1).count()
     assert n1 == spark.read.parquet(out).count()
-    # splice a legacy (empty, pre-manifest) marker AFTER the real ones:
-    # its own version and nothing below it loses servability
-    with open(os.path.join(out, "_batch_9_committed"), "w"):
-        pass
-    rows = history.history(out)
-    by_v = {r["version"]: r for r in rows}
-    assert by_v[0]["servable"] and by_v[1]["servable"]
-    assert by_v[9]["state"] == "legacy" and by_v[9]["servable"] is False
-    with pytest.raises(RuntimeError, match="legacy"):
-        history.table_asof(spark, out, 9)
-    assert history.table_asof(spark, out, 1).count() == n1
 
 
 def test_unified_history_rejects_unowned_dirs(tmp_path):

@@ -382,11 +382,10 @@ def test_stream_hot_hour_splits_like_batch(spark, tmp_path):
 
 
 def test_legacy_marker_without_closed_hour_hard_errors(spark, tmp_path):
-    """A pre-upgrade staging marker that already swept bins (offset >
-    0) but lacks the closed_hour watermark cannot attest the late-data
-    boundary — reading it must hard-error (state_compaction's legacy
-    policy), not silently default the guard off (advice, round 13). A
-    fresh-gate marker (offset 0) without the field stays accepted."""
+    """A staging marker that already swept bins (offset > 0) but lacks
+    the closed_hour watermark cannot attest the late-data boundary —
+    reading it must hard-error, not silently default the guard off
+    (advice, round 13)."""
     import json
 
     import pytest
@@ -397,11 +396,6 @@ def test_legacy_marker_without_closed_hour_hard_errors(spark, tmp_path):
         json.dump({"generation": 2, "offset": 1000}, fh)
     with pytest.raises(RuntimeError, match="closed_hour"):
         compaction_stream._staging_state(str(out))
-
-    with open(out / "staging_meta.json", "w") as fh:
-        json.dump({"generation": 0, "offset": 0}, fh)
-    sdir, off, closed = compaction_stream._staging_state(str(out))
-    assert off == 0 and closed == compaction_stream._NO_CLOSED_HOUR
 
 
 def test_partial_split_bin_write_is_retried_not_lost(spark, tmp_path):

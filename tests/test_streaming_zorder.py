@@ -200,52 +200,6 @@ def test_sweep_reclaims_folded_staging_and_old_generations(spark, tmp_path):
     assert zorder_stream.clustered_table(spark, out).count() == n_src
 
 
-def test_interrupted_sweep_swap_recovers_unfolded_rows(spark, tmp_path):
-    """Crash between the sweep's two renames (staging gone, survivors
-    sitting in staging.next): every staging consumer recovers the swap
-    first, so unfolded rows are never invisible to readers or lost to
-    the next fold."""
-    import datetime as dt
-
-    out = str(tmp_path / "zs")
-    os.makedirs(out)
-    rows = [
-        (i, dt.datetime(2024, 1, 1, 0, 0, i), i % 5, "view", 1.0, "{}", b)
-        for b in range(3)
-        for i in range(b * 10, b * 10 + 10)
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string, batch_id long",
-    )
-    staged = zorder_stream._bucketed(df)  # batch_id passes through
-    staging = os.path.join(out, "staging")
-    # base generation = batches 0..1 folded
-    base = zorder_stream._base_dir(out, 0)
-    (
-        staged.filter("batch_id <= 1").drop("batch_id")
-        .repartition("file_bucket").write.mode("overwrite")
-        .partitionBy("file_bucket").parquet(base)
-    )
-    with open(zorder_stream._marker_path(out), "w") as fh:
-        json.dump({"gen": 0, "folded_through": 1}, fh)
-    staged.write.mode("overwrite").parquet(staging)
-    # simulate the interrupted swap: survivors fully in .next, staging
-    # renamed away (the exact crash window between the two renames)
-    surv = spark.read.parquet(staging).filter("batch_id > 1")
-    surv.write.mode("overwrite").parquet(staging + ".next")
-    os.rename(staging, staging + ".old")
-
-    view = zorder_stream.clustered_table(spark, out)
-    assert view.count() == 30  # 20 folded + 10 unfolded, none lost
-    assert os.path.isdir(staging) and not os.path.isdir(staging + ".old")
-    zorder_stream.finalize_zorder(spark, out)
-    gen, folded = zorder_stream._gen_state(out)
-    assert (gen, folded) == (1, 2)
-    assert spark.read.parquet(zorder_stream._base_dir(out, gen)).count() == 30
-
-
 def _staged_fixture(spark, out, n_batches=3, folded_through=1):
     """A sink dir with a committed base (batches 0..folded_through) and
     staging holding ONE FILE PER BATCH (the sink's append shape)."""
