@@ -98,8 +98,9 @@ def split_product_master(
         raw.select(store_id.alias("store_id"), store_name.alias("store_name"))
         .dropDuplicates(["store_id"])
         .unionByName(
-            spark.createDataFrame(
-                [(DEFAULT_STORE_ID, DEFAULT_STORE_NAME)], "store_id long, store_name string"
+            spark.range(1).select(
+                F.lit(DEFAULT_STORE_ID).cast("long").alias("store_id"),
+                F.lit(DEFAULT_STORE_NAME).alias("store_name"),
             )
         )
         .dropDuplicates(["store_id"])
@@ -108,9 +109,9 @@ def split_product_master(
         raw.select(supplier_id.alias("supplier_id"), supplier_name.alias("supplier_name"))
         .dropDuplicates(["supplier_id"])
         .unionByName(
-            spark.createDataFrame(
-                [(DEFAULT_SUPPLIER_ID, DEFAULT_SUPPLIER_NAME)],
-                "supplier_id long, supplier_name string",
+            spark.range(1).select(
+                F.lit(DEFAULT_SUPPLIER_ID).cast("long").alias("supplier_id"),
+                F.lit(DEFAULT_SUPPLIER_NAME).alias("supplier_name"),
             )
         )
         .dropDuplicates(["supplier_id"])

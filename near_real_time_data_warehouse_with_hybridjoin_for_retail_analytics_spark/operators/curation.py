@@ -13,7 +13,7 @@ Scale notes (100 TB):
 - Every per-stratum window partitions by (lang) or (source): strata
   process in parallel, and within a stratum Spark's window exchange is
   a single hash partition — for a pathologically large single stratum
-  the two-phase form (per-range partial sums + broadcast offsets, cf.
+  the two-phase form (per-range partial sums + literal offsets, cf.
   streaming/hybrid_join.assign_sales_ids) swaps in without changing
   the operator's contract.
 - Decontamination joins on the n-gram key: the eval-side relation is

@@ -201,10 +201,13 @@ def assign_sales_ids(batch_df: DataFrame, offset: int):
     one partition), so ids stay deterministic wherever the order key is
     unique — every task numbers its own slice in parallel.
 
+    The bases go into the plan as a literal array indexed by ``_pid``,
+    which Catalyst folds to a constant: no driver-built DataFrame, no
+    Python worker and no broadcast per batch.
+
     Returns ``(numbered_df, row_count, cleanup)``; call ``cleanup()``
     after the result is consumed to drop the intermediate cache.
     """
-    spark = batch_df.sparkSession
     ranged = (
         batch_df.repartitionByRange(*_ID_ORDER)
         .withColumn("_pid", F.spark_partition_id())
@@ -215,18 +218,19 @@ def assign_sales_ids(batch_df: DataFrame, offset: int):
         for r in ranged.groupBy("_pid").agg(F.count(F.lit(1)).alias("n")).collect()
     }
     total = sum(counts.values())
+    # bases[pid] = rows in partitions < pid. An empty partition's entry
+    # is never read; an empty batch still gets one, so the array is typed.
     bases, running = [], 0
-    for pid in sorted(counts):
-        bases.append((pid, running))
-        running += counts[pid]
-    base_df = spark.createDataFrame(bases or [], "_pid int, _base long")
+    for pid in range(max(counts, default=0) + 1):
+        bases.append(F.lit(running).cast("long"))
+        running += counts.get(pid, 0)
+    base = F.element_at(F.array(*bases), F.col("_pid") + 1)
 
     w = Window.partitionBy("_pid").orderBy(*_ID_ORDER)
     numbered = (
-        ranged.join(F.broadcast(base_df), "_pid")
-        .withColumn(
+        ranged.withColumn(
             "sales_id",
-            (F.row_number().over(w) + F.col("_base") + F.lit(offset)).cast("long"),
+            (F.row_number().over(w) + base + F.lit(offset)).cast("long"),
         )
         .select(
             "sales_id",
