@@ -15,23 +15,43 @@ minimum is reported: this host shows multi-second noisy-neighbor CPU
 bursts, and min-of-N measures the engine rather than the neighbor. Set
 ``SPARK_GRAFT_BENCH_RUNS=1`` for a single-pass run.
 
-Set ``SPARK_GRAFT_BENCH_DETAIL=/path.json`` to additionally dump the
-raw per-pass timings plus per-query min/median/max/spread — the input
-for the variance study recorded in SCALE.md. The one-line stdout
-contract is unchanged.
+Every entry runs under its own Spark job group; once its timer stops,
+the job/stage/task counts the status tracker holds for that group go
+into the detail file with the entry's seconds.
+
+Set ``SPARK_GRAFT_BENCH_DETAIL=/path.json`` to choose where the raw
+per-pass timings plus per-query min/median/max/spread and job counts
+go — the input for the variance study recorded in SCALE.md. The
+one-line stdout contract is unchanged.
+
+Name filters time a subset with the same warm-up, staging and passes:
+``python bench.py q01 dedup_`` times the entries whose names contain
+any of the given substrings. A filtered run writes its detail to
+``SPARK_GRAFT_BENCH_DETAIL`` or else to a temp file, never to a
+``BENCH_FULL_r*.json`` in the repo, and prints that path as "detail".
+
+The warm-up, shared staging, per-pass reset, noop-sink timer and pass
+loop below are also the harness of ``tools/scale_study.py`` and
+``tools/bench_baseline.py``.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
+import statistics
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-import near_real_time_data_warehouse_with_hybridjoin_for_retail_analytics_spark.operators  # noqa: F401  (registers operator queries)
+import near_real_time_data_warehouse_with_hybridjoin_for_retail_analytics_spark.operators as ops  # registers operator queries
+from near_real_time_data_warehouse_with_hybridjoin_for_retail_analytics_spark.operators import (
+    dedup,
+)
 from near_real_time_data_warehouse_with_hybridjoin_for_retail_analytics_spark.plans import (
     registry,
     testdata_queries,  # noqa: F401  (registers the warehouse/ETL queries)
@@ -40,53 +60,58 @@ from near_real_time_data_warehouse_with_hybridjoin_for_retail_analytics_spark.se
     get_spark,
 )
 
+# Suite-level shared staging relations, materialized uncounted: trigram
+# shingles, per-doc shingle counts, exact-duplicate identity groups and
+# the representative LSH band keys. Each is persisted once per session
+# and consumed by several near-dup entries (minhash, simhash,
+# ngram-jaccard, bloom gate, incremental, report) — a production
+# pipeline materializes them once per corpus, so charging the build to
+# whichever entry the suite happens to run first would measure
+# ordering, not the operator. cached_doc_tokens is NOT staged: its only
+# steady-state consumer is the shard-plan artifact's cold build
+# (materialized() serves the warm path), so staging it would be a full
+# documents scan nothing timed consumes.
+SHARED_STAGING = (
+    dedup.cached_shingles,
+    dedup.cached_shingle_sizes,
+    dedup.cached_members,
+    dedup.cached_rep_bands,
+)
 
-def run_query(fn, spark, sf_dir) -> float:
+
+def run_query(fn, *args, **kwargs) -> float:
+    """Seconds to build ``fn(*args, **kwargs)`` and force it through the
+    ``noop`` sink."""
     t0 = time.time()
-    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    fn(*args, **kwargs).write.format("noop").mode("overwrite").save()
     return time.time() - t0
 
 
-def _stage_shared(spark, sf_dir, dedup) -> None:
-    """Materialize the suite-level shared staging relations uncounted:
-    trigram shingles, per-doc shingle counts, and exact-duplicate
-    identity groups. Each is persisted once per session and consumed by
-    several near-dup entries (minhash, simhash, ngram-jaccard, bloom
-    gate, incremental, report) — a production pipeline materializes
-    them once per corpus, so charging the build to whichever entry the
-    suite happens to run first would measure ordering, not the
-    operator."""
-    dedup.cached_shingles(spark, sf_dir).count()
-    dedup.cached_shingle_sizes(spark, sf_dir).count()
-    dedup.cached_members(spark, sf_dir).count()
-    dedup.cached_rep_bands(spark, sf_dir).count()
-    # cached_doc_tokens is NOT staged here: its only steady-state
-    # consumer is the shard-plan artifact's cold build (materialized()
-    # serves the warm path), so staging it would be a full documents
-    # scan nothing timed consumes.
+def stage_shared(spark, sf_dir: str) -> None:
+    for build in SHARED_STAGING:
+        build(spark, sf_dir).count()
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    try:
-        sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
-    except ValueError:
-        sf = None
-    spark = get_spark("bench")
-    spark.sparkContext.setLogLevel("ERROR")
+def reset_and_stage(spark, sf_dir: str) -> None:
+    """Give the next pass a fresh session's cache semantics: per-session
+    operator caches are rebuilt inside the pass (so min-of-N never times
+    a bare cache hit), and the shared staging relations are
+    re-materialized uncounted."""
+    ops.reset_session_caches()
+    stage_shared(spark, sf_dir)
 
-    names = list(registry.QUERIES)
-    # Warm-up: JVM + whole-stage-codegen compilation, parquet footer
-    # reads, one Arrow/python-worker spin-up for the pandas kernels, and
-    # the shared shingle staging relation (materialized once per
-    # session, reused by every near-dup pass — a suite-level cost, not
-    # any single query's).
-    run_query(registry.QUERIES[names[0]], spark, sf_dir)
-    run_query(registry.QUERIES["ann_topk_lsh"], spark, sf_dir)
+
+def warm_up(spark, sf_dir: str) -> None:
+    """JVM + whole-stage-codegen compilation, parquet footer reads, one
+    Arrow/python-worker spin-up for the pandas kernels, then the shared
+    staging relations (a suite-level cost, not any single query's)."""
+    queries = registry.QUERIES
+    run_query(queries[next(iter(queries))], spark, sf_dir)
+    run_query(queries["ann_topk_lsh"], spark, sf_dir)
     # ... and the star-schema tables: the first OLAP query otherwise pays
     # the lineitem/orders/dim parquet footer reads + join codegen alone
     # (q01 measured 1.44× slower than steady state without this).
-    run_query(registry.QUERIES["q01_top_brands_month_weekend"], spark, sf_dir)
+    run_query(queries["q01_top_brands_month_weekend"], spark, sf_dir)
     # ... and the dedup family's wide-aggregate codegen compiles (64-col
     # minhash mins, simhash conditional sums, the component-propagation
     # loop): run them once at the smallest testdata scale — the r5
@@ -100,58 +125,112 @@ def main() -> None:
             "dedup_components",
             "dedup_incremental",
         ):
-            run_query(registry.QUERIES[warm_name], spark, warm_sf)
-    from near_real_time_data_warehouse_with_hybridjoin_for_retail_analytics_spark.operators import (
-        dedup,
-    )
+            run_query(queries[warm_name], spark, warm_sf)
+    stage_shared(spark, sf_dir)
 
-    _stage_shared(spark, sf_dir, dedup)
 
+def job_counts(tracker, group: str) -> dict[str, int]:
+    """Jobs, stages and tasks the status tracker holds for a job group."""
+    job_ids = tracker.getJobIdsForGroup(group)
+    stages = tasks = 0
+    for jid in job_ids:
+        ji = tracker.getJobInfo(jid)
+        if ji is None:
+            continue
+        for sid in ji.stageIds:
+            si = tracker.getStageInfo(sid)
+            if si is not None and si.numTasks > 0:
+                stages += 1
+                tasks += si.numTasks
+    return {"jobs": len(job_ids), "stages": stages, "tasks": tasks}
+
+
+def timed_passes(spark, sf_dir: str, builds: dict, runs: int) -> list[dict]:
+    """Time every ``builds`` entry (name → zero-argument DataFrame
+    builder) once per pass for ``runs`` passes, calling
+    :func:`reset_and_stage` before each pass after the first. Returns
+    one ``{name: {"sec", "jobs", "stages", "tasks"}}`` per pass. The
+    job group is set before and the tracker read after the timer, so
+    neither is timed."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    passes = []
+    for p in range(runs):
+        if p > 0:
+            reset_and_stage(spark, sf_dir)
+        this_pass = {}
+        for name, build in builds.items():
+            group = f"bench:{p}:{name}"
+            sc.setJobGroup(group, name)
+            sec = run_query(build)
+            sc.setJobGroup(None, None)
+            this_pass[name] = {"sec": round(sec, 3), **job_counts(tracker, group)}
+        passes.append(this_pass)
+    return passes
+
+
+def fastest(passes: list[dict]) -> dict[str, dict]:
+    """Per entry, the record of its fastest pass (min-of-N)."""
+    return {
+        name: min((ps[name] for ps in passes), key=lambda r: r["sec"])
+        for name in passes[0]
+    }
+
+
+def main(argv: list[str] | None = None) -> None:
+    filters = sys.argv[1:] if argv is None else argv
+    unmatched = [f for f in filters if not any(f in n for n in registry.QUERIES)]
+    if unmatched:
+        raise SystemExit(f"no registry entry name contains {unmatched}")
+    names = [
+        n for n in registry.QUERIES if not filters or any(f in n for f in filters)
+    ]
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    try:
+        sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
+    except ValueError:
+        sf = None
+    spark = get_spark("bench")
+    spark.sparkContext.setLogLevel("ERROR")
+
+    warm_up(spark, sf_dir)
     # 3 passes by default (round-9 verdict): SCALE.md's variance
     # adjudication separates noise from regression via 3-pass spreads;
     # two passes cannot (e.g. q02 measured 4.56/0.85 s in r9).
     runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
-    passes: list[dict[str, float]] = []
-    timings: dict[str, float] = {}
-    for p in range(runs):
-        if p > 0:
-            # Re-run passes with the same cache semantics as a fresh
-            # session: per-session operator caches are rebuilt inside
-            # the pass (so min-of-N never times a bare cache hit), and
-            # the suite-level staging relations are re-materialized
-            # uncounted, exactly like the pass-0 warm-up above.
-            near_real_time_data_warehouse_with_hybridjoin_for_retail_analytics_spark.operators.reset_session_caches()
-            _stage_shared(spark, sf_dir, dedup)
-        this_pass: dict[str, float] = {}
-        for name in names:
-            t = round(run_query(registry.QUERIES[name], spark, sf_dir), 3)
-            this_pass[name] = t
-            timings[name] = min(timings.get(name, t), t)
-        passes.append(this_pass)
+    builds = {n: functools.partial(registry.QUERIES[n], spark, sf_dir) for n in names}
+    records = timed_passes(spark, sf_dir, builds, runs)
+    best = fastest(records)
+    passes = [{n: r["sec"] for n, r in ps.items()} for ps in records]
+    timings = {n: r["sec"] for n, r in best.items()}
 
     # Full, untruncated per-entry artifact: the driver's BENCH_r{N}.json
     # stores only a tail of stdout and has truncated away entries in
     # past rounds, so the complete picture is committed from here every
-    # run (round-5 verdict item 5). Round number = newest committed
+    # full run (round-5 verdict item 5). Round number = newest committed
     # BENCH_r* + 1; SPARK_GRAFT_BENCH_DETAIL overrides the path.
-    import re
-    import statistics
-
     repo = os.path.dirname(os.path.abspath(__file__))
-    rounds = [
-        int(m.group(1))
-        for f in os.listdir(repo)
-        if (m := re.match(r"BENCH_r(\d+)\.json$", f))
-    ]
-    detail_path = os.environ.get("SPARK_GRAFT_BENCH_DETAIL") or os.path.join(
-        repo, f"BENCH_FULL_r{(max(rounds, default=0) + 1):02d}.json"
-    )
+    detail_path = os.environ.get("SPARK_GRAFT_BENCH_DETAIL")
+    if not detail_path and filters:
+        fd, detail_path = tempfile.mkstemp(prefix="bench_detail_", suffix=".json")
+        os.close(fd)
+    elif not detail_path:
+        rounds = [
+            int(m.group(1))
+            for f in os.listdir(repo)
+            if (m := re.match(r"BENCH_r(\d+)\.json$", f))
+        ]
+        detail_path = os.path.join(
+            repo, f"BENCH_FULL_r{(max(rounds, default=0) + 1):02d}.json"
+        )
     stats = {
         name: {
             "min": min(ts),
             "median": round(statistics.median(ts), 3),
             "max": max(ts),
             "spread": round(max(ts) - min(ts), 3),
+            # job counts of the pass whose seconds "min" reports
+            **{k: best[name][k] for k in ("jobs", "stages", "tasks")},
         }
         for name, ts in ((n, [ps[n] for ps in passes]) for n in names)
     }
@@ -175,13 +254,8 @@ def main() -> None:
                 # warm-up pass — the reference's ETL also materializes
                 # its star before queries.sql runs, so query timings on
                 # both sides exclude the one-time enrichment join.
-                "staged_uncounted": [
-                    "cached_shingles",
-                    "cached_shingle_sizes",
-                    "cached_members",
-                    "cached_rep_bands",
-                    "star_fact (ensure_star, built in warm-up)",
-                ],
+                "staged_uncounted": [build.__name__ for build in SHARED_STAGING]
+                + ["star_fact (ensure_star, built in warm-up)"],
                 "passes": passes,
                 "stats": stats,
             },
@@ -212,7 +286,7 @@ def main() -> None:
                 "queries": headline,
                 "headline_sec": round(sum(headline.values()), 3),
                 "entries": len(names),
-                "detail": os.path.basename(detail_path),
+                "detail": detail_path if filters else os.path.basename(detail_path),
                 "sf": sf,
             }
         )

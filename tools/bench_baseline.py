@@ -13,8 +13,10 @@ interleaved per pass so noise bursts hit every variant alike,
   B. the 20 testdata-mapped registry queries (q01..q20), and
   C. every beyond-reference registry entry, aggregated per family,
 
-min-of-N (default 3) per entry, and emits one JSON artifact plus a
-ready-to-paste markdown ratio table for the BASELINE.md addendum.
+min-of-N (default 3) per entry with bench.py's harness (its warm-up
+plus one warehouse query, its shared staging, per-pass reset and noop
+timer), and emits one JSON artifact plus a ready-to-paste markdown
+ratio table for the BASELINE.md addendum.
 
 Usage:
     python tools/bench_baseline.py [--sf-dir /root/testdata/sf0.1] \
@@ -24,43 +26,26 @@ Usage:
 from __future__ import annotations
 
 import argparse
+import functools
 import json
 import os
 import shutil
 import sys
 import tempfile
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from pyspark.sql import functions as F  # noqa: E402
-
-import near_real_time_data_warehouse_with_hybridjoin_for_retail_analytics_spark.operators as ops  # noqa: E402
-from near_real_time_data_warehouse_with_hybridjoin_for_retail_analytics_spark.etl.date_dim import (  # noqa: E402
-    build_date_dim,
-)
-from near_real_time_data_warehouse_with_hybridjoin_for_retail_analytics_spark.etl.dimensions import (  # noqa: E402
-    build_customer_dim,
-    split_product_master,
-)
-from near_real_time_data_warehouse_with_hybridjoin_for_retail_analytics_spark.operators import (  # noqa: E402
-    dedup,
-)
+# importing bench also registers every registry entry
+from bench import fastest, run_query, timed_passes, warm_up  # noqa: E402
 from near_real_time_data_warehouse_with_hybridjoin_for_retail_analytics_spark.plans import (  # noqa: E402
     registry,
-    testdata_queries,  # noqa: F401  (registers q01..q20)
     warehouse_queries as wq,
 )
 from near_real_time_data_warehouse_with_hybridjoin_for_retail_analytics_spark.session import (  # noqa: E402
     get_spark,
 )
-from near_real_time_data_warehouse_with_hybridjoin_for_retail_analytics_spark.streaming import (  # noqa: E402
-    hybrid_join as hj,
-)
-
-from bench_warehouse import synthesize_master_csvs  # noqa: E402
+from tools.bench_warehouse import build_star  # noqa: E402
 
 # The two reference-ETL entries are part of the reference surface, not
 # the beyond-reference families (verdict convention: 92 − 20 − 2 = 70).
@@ -71,52 +56,6 @@ def _family(name: str) -> str:
     if name == "corpus_select":
         return "sample"
     return name.split("_", 1)[0]
-
-
-def _noop(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
-def build_warehouse(spark, sf_dir: str, work: str) -> int:
-    """Synthesize the reference master CSVs from the testdata, run the
-    ETL, register the star views. Returns the bench year (the dataset's
-    first year — the reference pins its literals to the first year of
-    ITS dataset the same way, queries.sql:9,143,162)."""
-    synthesize_master_csvs(spark, sf_dir, work)
-    customer = build_customer_dim(spark, os.path.join(work, "customer.csv"))
-    product, store, supplier = split_product_master(
-        spark, os.path.join(work, "product.csv")
-    )
-    raw = spark.read.option("header", True).csv(os.path.join(work, "tx.csv"))
-    dates = raw.select(
-        F.min(F.to_date("date")), F.max(F.to_date("date"))
-    ).first()
-    date_dim = build_date_dim(spark, dates[0], dates[1])
-    fact, _n, cleanup = hj.assign_sales_ids(
-        hj.enrich(hj.normalize_stream(raw), customer, product), offset=0
-    )
-    fact_path = os.path.join(work, "sales_parquet")
-    fact.write.mode("overwrite").parquet(fact_path)
-    cleanup()
-    wq.register_warehouse(
-        spark,
-        {
-            "customer": customer,
-            "product": product,
-            "store": store,
-            "supplier": supplier,
-            "date_dim": date_dim,
-            "sales": spark.read.parquet(fact_path),
-        },
-    )
-    return dates[0].year
-
-
-def _stage_shared(spark, sf_dir: str) -> None:
-    dedup.cached_shingles(spark, sf_dir).count()
-    dedup.cached_shingle_sizes(spark, sf_dir).count()
-    dedup.cached_members(spark, sf_dir).count()
-    dedup.cached_rep_bands(spark, sf_dir).count()
 
 
 def main() -> None:
@@ -136,7 +75,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     work = tempfile.mkdtemp(prefix="baseline_bench_")
     try:
-        bench_year = build_warehouse(spark, sf_dir, work)
+        bench_year = build_star(spark, sf_dir, work).years[0]
 
         td_names = sorted(
             n for n in registry.QUERIES if n[0] == "q" and n[1].isdigit()
@@ -151,48 +90,27 @@ def main() -> None:
         ]
         ref_etl = sorted(_REFERENCE_ETL & set(registry.QUERIES))
 
-        # Warm-up: same scope as bench.py — codegen compiles, parquet
-        # footers, Arrow worker spin-up, plus one warehouse query.
-        _noop(registry.QUERIES[td_names[0]](spark, sf_dir))
-        _noop(registry.QUERIES["ann_topk_lsh"](spark, sf_dir))
-        _noop(wq.run_query(spark, wh_names[0], year=bench_year))
-        warm_sf = os.path.join(
-            os.path.dirname(sf_dir.rstrip("/")), "sf0.001"
-        )
-        if os.path.isdir(warm_sf):
-            for warm_name in (
-                "dedup_minhash_lsh",
-                "dedup_simhash",
-                "dedup_components",
-                "dedup_incremental",
-            ):
-                _noop(registry.QUERIES[warm_name](spark, warm_sf))
-        _stage_shared(spark, sf_dir)
+        # Warm-up: bench.py's, plus one warehouse query.
+        warm_up(spark, sf_dir)
+        run_query(wq.run_query, spark, wh_names[0], year=bench_year)
 
-        wh: dict[str, float] = {}
-        td: dict[str, float] = {}
-        by: dict[str, float] = {}
-        for p in range(max(1, args.runs)):
-            if p > 0:
-                ops.reset_session_caches()
-                _stage_shared(spark, sf_dir)
-            # Interleave: warehouse twin i right before testdata twin i,
-            # so the pairwise ratio is measured seconds apart, not
-            # sessions apart.
-            for w_name, t_name in zip(wh_names, td_names):
-                t0 = time.time()
-                _noop(wq.run_query(spark, w_name, year=bench_year))
-                t = round(time.time() - t0, 3)
-                wh[w_name] = min(wh.get(w_name, t), t)
-                t0 = time.time()
-                _noop(registry.QUERIES[t_name](spark, sf_dir))
-                t = round(time.time() - t0, 3)
-                td[t_name] = min(td.get(t_name, t), t)
-            for name in ref_etl + beyond:
-                t0 = time.time()
-                _noop(registry.QUERIES[name](spark, sf_dir))
-                t = round(time.time() - t0, 3)
-                by[name] = min(by.get(name, t), t)
+        # Interleave: warehouse twin i right before testdata twin i, so
+        # the pairwise ratio is measured seconds apart, not sessions
+        # apart.
+        builds = {}
+        for w_name, t_name in zip(wh_names, td_names):
+            builds[w_name] = functools.partial(
+                wq.run_query, spark, w_name, year=bench_year
+            )
+            builds[t_name] = functools.partial(
+                registry.QUERIES[t_name], spark, sf_dir
+            )
+        for name in ref_etl + beyond:
+            builds[name] = functools.partial(registry.QUERIES[name], spark, sf_dir)
+        best = fastest(timed_passes(spark, sf_dir, builds, max(1, args.runs)))
+        wh = {n: best[n]["sec"] for n in wh_names}
+        td = {n: best[n]["sec"] for n in td_names}
+        by = {n: best[n]["sec"] for n in ref_etl + beyond}
 
         families: dict[str, dict] = {}
         for name in beyond:

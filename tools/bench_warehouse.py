@@ -30,16 +30,20 @@ reference's headline capability (hybridjoin.py's streaming loop).
 from __future__ import annotations
 
 import argparse
+import datetime as dt
 import json
 import os
 import shutil
 import sys
 import tempfile
 import time
+from typing import NamedTuple
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from bench import run_query
 
 from near_real_time_data_warehouse_with_hybridjoin_for_retail_analytics_spark.etl.date_dim import (
     build_date_dim,
@@ -131,6 +135,59 @@ def synthesize_master_csvs(spark: SparkSession, sf_dir: str, out_dir: str) -> in
     return n
 
 
+class Star(NamedTuple):
+    rows: int  # synthesized transactions
+    etl_sec: float  # dims → enrich → ids → fact write, wall seconds
+    years: list[int]  # the fact's years, ascending
+    tables: dict[str, DataFrame]  # the registered warehouse views
+
+
+def build_star(spark: SparkSession, sf_dir: str, work: str) -> Star:
+    """Synthesize the master CSVs into ``work``, run the reference ETL
+    (dims → normalize → HYBRIDJOIN enrich → id assignment → parquet fact
+    under ``work``) and register the warehouse views over it. The views
+    read files in ``work``, so it must outlive their use.
+
+    ``etl_sec`` times the ETL without the CSV synthesis — the
+    reference's only recorded metric is this wall clock (its
+    hybridjoin.py:500-501). ``date_dim`` spans the fact's whole years:
+    all 20 warehouse queries return the same rows as over the tx
+    min..max date range (checked at sf0.001 and sf0.01)."""
+    rows = synthesize_master_csvs(spark, sf_dir, work)
+    t0 = time.time()
+    customer = build_customer_dim(spark, os.path.join(work, "customer.csv"))
+    product, store, supplier = split_product_master(
+        spark, os.path.join(work, "product.csv")
+    )
+    raw = spark.read.option("header", True).csv(os.path.join(work, "tx.csv"))
+    fact, _n, cleanup = hj.assign_sales_ids(
+        hj.enrich(hj.normalize_stream(raw), customer, product), offset=0
+    )
+    fact_path = os.path.join(work, "sales_parquet")
+    fact.write.mode("overwrite").parquet(fact_path)
+    cleanup()  # drop the id-assignment intermediate cache
+    sales = spark.read.parquet(fact_path)
+    years = sorted(
+        r["y"]
+        for r in sales.selectExpr("date_id DIV 10000 AS y").distinct().collect()
+        if r["y"] is not None
+    )
+    date_dim = build_date_dim(
+        spark, dt.date(years[0], 1, 1), dt.date(years[-1], 12, 31)
+    )
+    etl_sec = time.time() - t0
+    tables = {
+        "customer": customer,
+        "product": product,
+        "store": store,
+        "supplier": supplier,
+        "date_dim": date_dim,
+        "sales": sales,
+    }
+    wq.register_warehouse(spark, tables)
+    return Star(rows, etl_sec, years, tables)
+
+
 TX_DDL = "orderID string, Customer_ID string, Product_ID string, quantity string, date string"
 
 
@@ -172,6 +229,7 @@ def bench_stream(
     )
     q.awaitTermination()
     sec = time.time() - t0
+    q.writer_token.release()
     loaded = spark.read.parquet(out).count()
     return {
         "rows": loaded,
@@ -179,16 +237,6 @@ def bench_stream(
         "rows_per_sec": int(loaded / sec),
         "micro_batches": -(-files // max_files_per_trigger),
     }
-
-
-def run_query(
-    spark: SparkSession, name: str, year: int = wq.REFERENCE_YEAR
-) -> float:
-    t0 = time.time()
-    wq.run_query(spark, name, year=year).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    return time.time() - t0
 
 
 def main() -> None:
@@ -209,52 +257,27 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     work = tempfile.mkdtemp(prefix="wh_bench_")
     try:
-        n_tx = synthesize_master_csvs(spark, args.sf_dir, work)
-
-        # --- ETL, timed end-to-end (the reference's only recorded metric
-        # is this wall-clock: /root/reference/hybridjoin.py:500-501) ---
-        t0 = time.time()
-        customer = build_customer_dim(spark, os.path.join(work, "customer.csv"))
-        product, store, supplier = split_product_master(
-            spark, os.path.join(work, "product.csv")
-        )
-        raw = spark.read.option("header", True).csv(os.path.join(work, "tx.csv"))
-        dates = raw.select(F.min(F.to_date("date")), F.max(F.to_date("date"))).first()
-        date_dim = build_date_dim(spark, dates[0], dates[1])
-        fact, _n, cleanup = hj.assign_sales_ids(
-            hj.enrich(hj.normalize_stream(raw), customer, product), offset=0
-        )
-        fact_path = os.path.join(work, "sales_parquet")
-        fact.write.mode("overwrite").parquet(fact_path)
-        cleanup()  # drop the id-assignment intermediate cache before timing queries
-        etl_sec = time.time() - t0
-
-        tables: dict[str, DataFrame] = {
-            "customer": customer,
-            "product": product,
-            "store": store,
-            "supplier": supplier,
-            "date_dim": date_dim,
-            "sales": spark.read.parquet(fact_path),
-        }
-        wq.register_warehouse(spark, tables)
-
+        star = build_star(spark, args.sf_dir, work)
         # The reference pins the year literal to the first year of ITS
         # dataset (2017 of 2017–2020, queries.sql:9,143,162); bind the
         # parameterized year to this dataset's first year the same way.
-        bench_year = dates[0].year
+        bench_year = star.years[0]
         names = sorted(wq.WAREHOUSE_QUERIES)
-        run_query(spark, names[0], year=bench_year)  # codegen/footer warm-up
+        run_query(wq.run_query, spark, names[0], year=bench_year)  # codegen/footer warm-up
         timings: dict[str, float] = {}
         for _ in range(max(1, args.runs)):
             for name in names:
-                t = round(run_query(spark, name, year=bench_year), 3)
+                t = round(run_query(wq.run_query, spark, name, year=bench_year), 3)
                 timings[name] = min(timings.get(name, t), t)
 
         stream_stats = None
         if args.stream:
             stream_stats = bench_stream(
-                spark, work, customer, product, files=args.stream_files
+                spark,
+                work,
+                star.tables["customer"],
+                star.tables["product"],
+                files=args.stream_files,
             )
 
         result = {
@@ -262,9 +285,9 @@ def main() -> None:
             "value": round(sum(timings.values()), 3),
             "unit": "sec",
             "etl": {
-                "rows": n_tx,
-                "sec": round(etl_sec, 3),
-                "rows_per_sec": int(n_tx / etl_sec),
+                "rows": star.rows,
+                "sec": round(star.etl_sec, 3),
+                "rows_per_sec": int(star.rows / star.etl_sec),
             },
             "queries": timings,
             "sf": sf,

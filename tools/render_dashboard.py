@@ -8,7 +8,6 @@ Usage: python tools/render_dashboard.py [sf_dir] [out.html]
 
 from __future__ import annotations
 
-import datetime as dt
 import os
 import sys
 import tempfile
@@ -16,62 +15,22 @@ import tempfile
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from near_real_time_data_warehouse_with_hybridjoin_for_retail_analytics_spark.etl.date_dim import (  # noqa: E402
-    build_date_dim,
-)
-from near_real_time_data_warehouse_with_hybridjoin_for_retail_analytics_spark.etl.dimensions import (  # noqa: E402
-    build_customer_dim,
-    split_product_master,
-)
 from near_real_time_data_warehouse_with_hybridjoin_for_retail_analytics_spark.plans import (  # noqa: E402
     dashboard_html,
-    warehouse_queries as wq,
 )
 from near_real_time_data_warehouse_with_hybridjoin_for_retail_analytics_spark.session import (  # noqa: E402
     get_spark,
 )
-from near_real_time_data_warehouse_with_hybridjoin_for_retail_analytics_spark.streaming import (  # noqa: E402
-    hybrid_join as hj,
-)
-from tools.bench_warehouse import synthesize_master_csvs  # noqa: E402
+from tools.bench_warehouse import build_star  # noqa: E402
 
 
 def prepare_warehouse(spark, sf_dir: str) -> list[int]:
     """Synthesize the master CSVs, run the real ETL, register the
     warehouse views, and return the fact table's years — the shared
     setup for the static artifact (main below) AND the live server
-    (tools/serve_dashboard.py, tests/test_dashboard_server.py)."""
-    work = tempfile.mkdtemp(prefix="dashwork_")
-    synthesize_master_csvs(spark, sf_dir, work)
-
-    customer = build_customer_dim(spark, os.path.join(work, "customer.csv"))
-    product, store, supplier = split_product_master(
-        spark, os.path.join(work, "product.csv")
-    )
-    raw = spark.read.option("header", True).csv(os.path.join(work, "tx.csv"))
-    fact, _n, _cleanup = hj.assign_sales_ids(
-        hj.enrich(hj.normalize_stream(raw), customer, product), offset=0
-    )
-    years = sorted(
-        r["y"]
-        for r in fact.selectExpr("date_id DIV 10000 AS y").distinct().collect()
-        if r["y"] is not None
-    )
-    date_dim = build_date_dim(
-        spark, dt.date(years[0], 1, 1), dt.date(years[-1], 12, 31)
-    )
-    wq.register_warehouse(
-        spark,
-        {
-            "customer": customer,
-            "product": product,
-            "store": store,
-            "supplier": supplier,
-            "date_dim": date_dim,
-            "sales": fact,
-        },
-    )
-    return years
+    (tools/serve_dashboard.py, tests/test_dashboard_server.py). The
+    work dir holds the fact the views read, so it is left in place."""
+    return build_star(spark, sf_dir, tempfile.mkdtemp(prefix="dashwork_")).years
 
 
 def main() -> None:

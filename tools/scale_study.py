@@ -7,29 +7,30 @@ entry is fixed-cost dominated at these sizes (planning/codegen/job
 scheduling), e ≈ 1 means linear data work, e > 1 superlinear (a red
 flag unless the operator is a labeled quadratic truth baseline).
 
+Timing uses bench.py's harness (shared staging, per-pass reset, noop
+timer, min-of-N pass loop); its warm-up is every studied entry at the
+smallest sf, and each sf starts from reset caches like every pass.
+
 Usage: python tools/scale_study.py [--runs 2] [--out SCALE_STUDY.json]
 """
 
 from __future__ import annotations
 
 import argparse
+import functools
 import json
 import math
 import os
 import re
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-import near_real_time_data_warehouse_with_hybridjoin_for_retail_analytics_spark.operators as ops  # noqa: E402
-from near_real_time_data_warehouse_with_hybridjoin_for_retail_analytics_spark.operators import (  # noqa: E402
-    dedup,
-)
+# importing bench also registers every registry entry
+from bench import fastest, reset_and_stage, run_query, timed_passes  # noqa: E402
 from near_real_time_data_warehouse_with_hybridjoin_for_retail_analytics_spark.plans import (  # noqa: E402
     registry,
-    testdata_queries,  # noqa: F401
 )
 from near_real_time_data_warehouse_with_hybridjoin_for_retail_analytics_spark.session import (  # noqa: E402
     get_spark,
@@ -165,30 +166,18 @@ def main() -> None:
     if os.path.isfile(os.path.join(SF1_DIR, "_SF1_OK")):
         sfs.append(SF1_DIR)
 
-    def run(name: str, d: str) -> float:
-        t0 = time.time()
-        registry.QUERIES[name](spark, d).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        return time.time() - t0
-
     # Warm-up: codegen + Arrow workers at the smallest scale.
     for name in entries:
-        run(name, sfs[0])
+        run_query(registry.QUERIES[name], spark, sfs[0])
 
     results: dict[str, dict[str, float]] = {n: {} for n in entries}
     for d in sfs:
         tag = os.path.basename(d.rstrip("/"))
-        for p in range(max(1, args.runs)):
-            ops.reset_session_caches()
-            dedup.cached_shingles(spark, d).count()
-            dedup.cached_shingle_sizes(spark, d).count()
-            dedup.cached_members(spark, d).count()
-            dedup.cached_rep_bands(spark, d).count()
-            for name in entries:
-                t = round(run(name, d), 3)
-                cur = results[name].get(tag)
-                results[name][tag] = t if cur is None else min(cur, t)
+        reset_and_stage(spark, d)
+        builds = {n: functools.partial(registry.QUERIES[n], spark, d) for n in entries}
+        best = fastest(timed_passes(spark, d, builds, max(1, args.runs)))
+        for name in entries:
+            results[name][tag] = best[name]["sec"]
 
     # per-decade exponents between consecutive sfs (each step is 10×)
     tags = [os.path.basename(d.rstrip("/")) for d in sfs]
