@@ -287,3 +287,26 @@ def test_tool_imports(module):
     """Each tool imports cleanly; none of them runs main() on import."""
     mod = importlib.import_module(module)
     assert callable(getattr(mod, "main", None))
+
+
+def test_baseline_times_every_warehouse_twin_under_its_own_key():
+    """Some warehouse twin names are also registry names; each of the
+    two gets its own timed build, and the warehouse key runs the
+    warehouse query."""
+    from near_real_time_data_warehouse_with_hybridjoin_for_retail_analytics_spark.plans import (
+        registry,
+        warehouse_queries as wq,
+    )
+    from tools import bench_baseline as bb
+
+    wh_names = sorted(wq.WAREHOUSE_QUERIES)
+    td_names = sorted(n for n in registry.QUERIES if n[0] == "q" and n[1].isdigit())
+    assert set(wh_names) & set(td_names)  # the case this test guards
+    rest = ["etl_enrich_events"]
+    builds = bb.interleaved_builds(None, "sf0.01", 2017, wh_names, td_names, rest)
+    assert len(builds) == len(wh_names) + len(td_names) + len(rest)
+    for name in wh_names:
+        build = builds[bb.WH_PREFIX + name]
+        assert build.func is wq.run_query and build.args[1] == name
+    for name in td_names + rest:
+        assert builds[name].func is registry.QUERIES[name]

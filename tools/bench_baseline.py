@@ -58,6 +58,32 @@ def _family(name: str) -> str:
     return name.split("_", 1)[0]
 
 
+# Warehouse twins are timed under this key prefix: three of their names
+# (q13_supplier_contribution, q16_affinity_pairs, q19_daily_spikes) are
+# also registry names, and one dict holds both kinds of build.
+WH_PREFIX = "wh:"
+
+
+def interleaved_builds(
+    spark, sf_dir: str, bench_year: int, wh_names, td_names, rest
+) -> dict:
+    """Timed builds in pass order: warehouse twin i right before testdata
+    twin i, so each pairwise ratio is measured seconds apart, not
+    sessions apart; then the ``rest`` registry entries."""
+    builds = {}
+    for w_name, t_name in zip(wh_names, td_names):
+        builds[WH_PREFIX + w_name] = functools.partial(
+            wq.run_query, spark, w_name, year=bench_year
+        )
+        builds[t_name] = functools.partial(registry.QUERIES[t_name], spark, sf_dir)
+    for name in rest:
+        builds[name] = functools.partial(registry.QUERIES[name], spark, sf_dir)
+    assert len(builds) == len(wh_names) + len(td_names) + len(rest), (
+        "a build name collides or the twin lists differ in length"
+    )
+    return builds
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument(
@@ -94,21 +120,11 @@ def main() -> None:
         warm_up(spark, sf_dir)
         run_query(wq.run_query, spark, wh_names[0], year=bench_year)
 
-        # Interleave: warehouse twin i right before testdata twin i, so
-        # the pairwise ratio is measured seconds apart, not sessions
-        # apart.
-        builds = {}
-        for w_name, t_name in zip(wh_names, td_names):
-            builds[w_name] = functools.partial(
-                wq.run_query, spark, w_name, year=bench_year
-            )
-            builds[t_name] = functools.partial(
-                registry.QUERIES[t_name], spark, sf_dir
-            )
-        for name in ref_etl + beyond:
-            builds[name] = functools.partial(registry.QUERIES[name], spark, sf_dir)
+        builds = interleaved_builds(
+            spark, sf_dir, bench_year, wh_names, td_names, ref_etl + beyond
+        )
         best = fastest(timed_passes(spark, sf_dir, builds, max(1, args.runs)))
-        wh = {n: best[n]["sec"] for n in wh_names}
+        wh = {n: best[WH_PREFIX + n]["sec"] for n in wh_names}
         td = {n: best[n]["sec"] for n in td_names}
         by = {n: best[n]["sec"] for n in ref_etl + beyond}
 
