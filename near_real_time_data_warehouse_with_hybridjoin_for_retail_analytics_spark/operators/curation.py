@@ -12,10 +12,10 @@ id's string form (identical across engines, RNG-free).
 Scale notes (100 TB):
 - Every per-stratum window partitions by (lang) or (source): strata
   process in parallel, and within a stratum Spark's window exchange is
-  a single hash partition — for a pathologically large single stratum
-  the two-phase form (per-range partial sums + literal offsets, cf.
-  streaming/hybrid_join.assign_sales_ids) swaps in without changing
-  the operator's contract.
+  a single hash partition, so one task walks each stratum. A
+  pathologically large single stratum would need a range-partitioned
+  form (per-range partial sums prefix-summed into offsets); none is
+  implemented.
 - Decontamination joins on the n-gram key: the eval-side relation is
   tiny (held-out benchmarks), so Catalyst broadcasts it; the train side
   never shuffles its text, only (doc_id, gram) pairs.

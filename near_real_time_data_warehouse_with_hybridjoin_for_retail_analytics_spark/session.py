@@ -45,10 +45,7 @@ def get_spark(app_name: str = "nrt-retail-warehouse") -> SparkSession:
         # sf0.1 (interleaved, warm): kernel entries −20..35%
         # (ann_topk_ivfpq 2.02→1.42 s, dedup_minhash_lsh 1.58→1.32 s),
         # SQL-surface entries neutral; see OPTIMIZATION_r18.md.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "64k"),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         # Arrow for any pandas interchange (beyond-reference operators).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Dimensions are small; let Catalyst broadcast them (we also mark

@@ -1,15 +1,15 @@
 """Sales-id assignment (S10) and the dimension defaults it relies on.
 
-``assign_sales_ids`` numbers a batch in two phases: a per-range-partition
-count collected to the driver, then ``row_number()`` within each
-partition plus that partition's base. These tests pin the plan shape
-(the bases are a folded literal, not a driver-built table joined back),
-the numbering against a single-window reference, and the sink's
-behaviour when a whole batch is dropped before numbering.
+``assign_sales_ids`` persists and counts a batch, then numbers it with
+``row_number()`` over one window ordered by the id-order key. These
+tests pin the plan shape (no range shuffle, one window, no driver-built
+table joined back), the numbering against a single-window reference,
+and the sink's behaviour when a whole batch is dropped before numbering.
 """
 
 from __future__ import annotations
 
+import re
 from decimal import Decimal
 
 from pyspark.sql import Window
@@ -56,12 +56,17 @@ def test_numbering_matches_single_window_without_a_driver_table(spark, tmp_path)
     numbered, n, cleanup = hj.assign_sales_ids(batch, OFFSET)
     try:
         got = numbered.collect()
-        plan = numbered._jdf.queryExecution().executedPlan().toString()
+        executed = numbered._jdf.queryExecution().executedPlan()
+        plan = executed.toString()
+        final = executed.executedPlan().toString()  # AQE's final plan, cache included
     finally:
         cleanup()
     assert n == N_ROWS == len(got)
     assert "ExistingRDD" not in plan
     assert "BroadcastHashJoin" not in plan
+    # one ordered window over the whole batch, no range shuffle
+    assert "rangepartitioning" not in final.lower()
+    assert len(re.findall(r"\bWindow \[", final)) == 1
 
     # ids are unique and exactly OFFSET+1 .. OFFSET+N
     assert sorted(r.sales_id for r in got) == list(range(OFFSET + 1, OFFSET + N_ROWS + 1))
