@@ -20,22 +20,23 @@ is the same one used at 100 TB: ingest into right-sized files (here
 ``_SPLIT_FILES`` files per table, range-partitioned on the table's time
 key so parquet min/max footers prune date ranges file-at-a-time).
 
-``load_table`` therefore re-lays big tables out once per machine into
-``/tmp/sparkgraft_ingest/<sf>/<table>`` (guarded by a source-fingerprint
-marker, atomic rename, reused across processes) and serves the
-re-layout. Row *contents* are byte-identical to the source — only file
-count and row order change, and every consumer is order-insensitive.
-Set ``SPARK_GRAFT_NO_INGEST=1`` to read the raw single-file layout.
+``load_table`` therefore re-lays big tables out once per corpus through
+the build-once store (``store.stored``: source-fingerprint marker,
+atomic rename, reused across processes) and serves the re-layout. Row
+*contents* are byte-identical to the source — only file count and row
+order change, and every consumer is order-insensitive. The q01–q20
+star facts (``ensure_star``) go through the same store.
 """
 
 from __future__ import annotations
 
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampNTZType
+
+from .store import stored
 
 TESTDATA_TABLES = (
     "region",
@@ -50,7 +51,6 @@ TESTDATA_TABLES = (
     "embeddings",
 )
 
-_INGEST_ROOT = "/tmp/sparkgraft_ingest"
 # Below this size a table is a broadcast dim — splitting buys nothing.
 _SPLIT_MIN_BYTES = 128 * 1024
 _SPLIT_FILES = 32  # one row group per core on the local[32] harness
@@ -61,6 +61,10 @@ _RANGE_KEYS = {
     "orders": "o_orderdate",
     "events": "ts",
 }
+# v2: rebuilds every copy written before the shared store (some hold an
+# NTZ events ts)
+_INGEST_VERSION = f"v2-n{_SPLIT_FILES}"
+_STAR_VERSION = "v3"  # v2: measures pre-cast; v3: + derived date parts/cents
 
 
 def _read_raw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -94,67 +98,80 @@ def _normalize_events_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-def _ensure_ingested(spark: SparkSession, sf_dir: str, name: str) -> str | None:
-    """Re-layout ``name`` into a multi-file parquet dir; returns the dir,
-    or None when the table should be read raw (small, or ingest off)."""
-    if os.environ.get("SPARK_GRAFT_NO_INGEST"):
-        return None
-    src = f"{sf_dir}/{name}.parquet"
+def _ingested(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """``name`` re-laid out into ``_SPLIT_FILES`` files, or read raw
+    when the table is small."""
     try:
-        src_stat = os.stat(src)
+        small = os.path.getsize(f"{sf_dir}/{name}.parquet") < _SPLIT_MIN_BYTES
     except OSError:
-        return None
-    if src_stat.st_size < _SPLIT_MIN_BYTES:
-        return None
-
-    sf_tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    dest = os.path.join(_INGEST_ROOT, sf_tag, name)
-    fingerprint = f"{src_stat.st_size}:{int(src_stat.st_mtime)}:{_SPLIT_FILES}"
-    marker = os.path.join(dest, "_INGEST_OK")
-    try:
-        with open(marker) as fh:
-            if fh.read().strip() == fingerprint:
-                return dest
-    except OSError:
-        pass
-
-    df = _read_raw(spark, sf_dir, name)
+        small = True
+    if small:
+        return _read_raw(spark, sf_dir, name)
     key = _RANGE_KEYS.get(name)
-    if key is not None:
-        out = df.repartitionByRange(_SPLIT_FILES, key).sortWithinPartitions(key)
-    else:
-        out = df.repartition(_SPLIT_FILES)
-    staging = f"{dest}__staging_{uuid.uuid4().hex[:8]}"
-    out.write.mode("overwrite").parquet(staging)
-    with open(os.path.join(staging, "_INGEST_OK"), "w") as fh:
-        fh.write(fingerprint)
-    try:
-        os.rename(staging, dest)
-    except OSError:
-        # lost the race to a concurrent ingester — use theirs
-        import shutil
 
-        shutil.rmtree(staging, ignore_errors=True)
-    return dest
+    def layout(df: DataFrame, path: str) -> None:
+        if key is not None:
+            df = df.repartitionByRange(_SPLIT_FILES, key).sortWithinPartitions(key)
+        else:
+            df = df.repartition(_SPLIT_FILES)
+        df.write.parquet(path)
 
-
-# Lazy DataFrame plans are immutable — reuse them per (session, sf,
-# table, layout) so repeated queries skip file listing + footer
-# analysis (~0.4s/query across a 4-table star build).
-_DF_CACHE: dict[tuple[str, str, str, bool, int], DataFrame] = {}
-
-
-def _load_plain(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """The non-bucketed read path: ingested multi-file layout when
-    available, raw single-file parquet otherwise."""
-    dest = _ensure_ingested(spark, sf_dir, name)
-    return (
-        spark.read.parquet(dest) if dest is not None
-        else _read_raw(spark, sf_dir, name)
+    return stored(
+        spark,
+        sf_dir,
+        f"ingest/{name}",
+        (name,),
+        _INGEST_VERSION,
+        lambda: _read_raw(spark, sf_dir, name),
+        layout,
     )
 
 
-_STAR_VERSION = "v3"  # v2: measures pre-cast; v3: + derived date parts/cents
+# Lazy DataFrame plans are immutable — reuse them per (session, sf,
+# relation) so repeated queries skip file listing + footer analysis
+# (~0.4s/query across a 4-table star build).
+_DF_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+
+
+def _star_columns(df: DataFrame) -> DataFrame:
+    """The star's derived columns, computed once per corpus."""
+    return (
+        # Pre-cast the measures the way the reference's ETL stores
+        # money as NUMERIC (star_schema.sql:30,63): the exact
+        # DECIMAL(18,4) every money aggregate needs (functions/
+        # money.py) is paid once per corpus here, so query-side
+        # dec() casts collapse to no-ops (SimplifyCasts) and SUMs
+        # read the decimal straight off the parquet page. Values
+        # are identical by construction — it is the same cast.
+        df.withColumn(
+            "l_extendedprice",
+            F.col("l_extendedprice").cast("decimal(18,4)"),
+        )
+        .withColumn("l_quantity", F.col("l_quantity").cast("long"))
+        # v3: pre-derive the per-row date parts and the exact
+        # integer ten-thousandths the hot aggregations consume —
+        # the same move the reference's ETL makes when it resolves
+        # date_id/month at load time (star_schema.sql:36-44), so
+        # query-side derivation collapses to a column read.
+        .withColumn("l_month", F.month("l_shipdate").cast("int"))
+        .withColumn("l_weekend", F.dayofweek("l_shipdate").isin(1, 7))
+        .withColumn("l_date", F.to_date("l_shipdate"))
+        .withColumn(
+            "l_cents",
+            (F.col("l_extendedprice") * 10000).cast("long"),
+        )
+        # last, where the partitioned read-back puts it
+        .withColumn("l_year", F.year("l_shipdate").cast("int"))
+    )
+
+
+def _star_layout(df: DataFrame, path: str) -> None:
+    (
+        df.repartitionByRange(_SPLIT_FILES, "l_year", "l_shipdate")
+        .sortWithinPartitions("l_year", "l_shipdate")
+        .write.partitionBy("l_year")
+        .parquet(path)
+    )
 
 
 def ensure_star(
@@ -163,141 +180,44 @@ def ensure_star(
     name: str,
     sources: tuple[str, ...],
     build,
-) -> DataFrame | None:
+) -> DataFrame:
     """Materialize a pre-joined star relation to parquet once per
     corpus and serve queries from it — the reference's own warehouse
     architecture: its ETL enriches every transaction with the master
-    dimensions BEFORE any of queries.sql runs
-    (/root/reference/hybridjoin.py:379-420 joins customer/product per
-    tuple; star_schema.sql's Sales fact holds the resolved keys), so
+    dimensions BEFORE any of queries.sql runs (reference
+    hybridjoin.py:379-420 joins customer/product per tuple;
+    star_schema.sql's Sales fact holds the resolved keys), so
     reference queries never re-join fact-sized tables at query time.
-    The testdata-mapped q01–q20 get the same contract: ``build()`` runs
-    once per corpus (fingerprinted on the source parquet files +
-    pipeline version), lands as a year-partitioned parquet star, and
-    every query scans that.
+    The testdata-mapped q01–q20 get the same contract: ``build()`` plus
+    the derived columns (``_star_columns``) runs once per corpus
+    (fingerprinted on the ``sources`` parquet files + ``_STAR_VERSION``)
+    and lands as a year-partitioned parquet star that every query scans.
 
     Partitioned by ``l_year`` (derived from l_shipdate, the fact date)
     so latest-year / per-year filters prune whole partitions —
     year(col) = scalar is not a pushable parquet predicate, but a
-    partition-column equi-filter is. Returns None (caller computes
-    inline) when ingest is disabled or the bucketed layout is active —
-    bucketed mode is the alternative physical design whose co-located
-    joins the star would bypass."""
-    if os.environ.get("SPARK_GRAFT_NO_INGEST") or os.environ.get(
-        "SPARK_GRAFT_BUCKETED"
-    ):
-        return None
-    fps = []
-    for s in sources:
-        try:
-            st = os.stat(f"{sf_dir}/{s}.parquet")
-        except OSError:
-            return None
-        fps.append(f"{st.st_size}:{int(st.st_mtime)}")
-    fingerprint = ":".join(fps) + f":{_STAR_VERSION}"
-    sf_tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    dest = os.path.join(_INGEST_ROOT, sf_tag, f"star_{name}")
-    key = (spark.sparkContext.applicationId, sf_dir, f"star_{name}", False, -1)
-    marker = os.path.join(dest, "_INGEST_OK")
-    try:
-        with open(marker) as fh:
-            current = fh.read().strip() == fingerprint
-    except OSError:
-        current = False
-    if not current:
-        df = build()
-        staging = f"{dest}__staging_{uuid.uuid4().hex[:8]}"
-        (
-            df.withColumn("l_year", F.year("l_shipdate").cast("int"))
-            # Pre-cast the measures the way the reference's ETL stores
-            # money as NUMERIC (star_schema.sql:30,63): the exact
-            # DECIMAL(18,4) every money aggregate needs (functions/
-            # money.py) is paid once per corpus here, so query-side
-            # dec() casts collapse to no-ops (SimplifyCasts) and SUMs
-            # read the decimal straight off the parquet page. Values
-            # are identical by construction — it is the same cast.
-            .withColumn(
-                "l_extendedprice",
-                F.col("l_extendedprice").cast("decimal(18,4)"),
-            )
-            .withColumn("l_quantity", F.col("l_quantity").cast("long"))
-            # v3: pre-derive the per-row date parts and the exact
-            # integer ten-thousandths the hot aggregations consume —
-            # the same move the reference's ETL makes when it resolves
-            # date_id/month at load time (star_schema.sql:36-44), so
-            # query-side derivation collapses to a column read. Values
-            # identical by construction: the expressions are the ones
-            # the queries would otherwise evaluate per row (queries
-            # fall back to inline derivation when the star is off).
-            .withColumn("l_month", F.month("l_shipdate").cast("int"))
-            .withColumn(
-                "l_weekend", F.dayofweek("l_shipdate").isin(1, 7)
-            )
-            .withColumn("l_date", F.to_date("l_shipdate"))
-            .withColumn(
-                "l_cents",
-                (F.col("l_extendedprice") * 10000).cast("long"),
-            )
-            .repartitionByRange(_SPLIT_FILES, "l_year", "l_shipdate")
-            .sortWithinPartitions("l_year", "l_shipdate")
-            .write.mode("overwrite")
-            .partitionBy("l_year")
-            .parquet(staging)
-        )
-        with open(os.path.join(staging, "_INGEST_OK"), "w") as fh:
-            fh.write(fingerprint)
-        import shutil
-
-        if os.path.isdir(dest):  # stale fingerprint (version bump) — replace
-            shutil.rmtree(dest, ignore_errors=True)
-        try:
-            os.rename(staging, dest)
-        except OSError:
-            shutil.rmtree(staging, ignore_errors=True)
-            # Racer won or the stale dest would not die: serve dest only
-            # if its marker proves it current, else fall back inline.
-            try:
-                with open(marker) as fh:
-                    if fh.read().strip() != fingerprint:
-                        return df
-            except OSError:
-                return df
-        _DF_CACHE.pop(key, None)
+    partition-column equi-filter is. When the store cannot serve a
+    current copy, the inline frame carries the same columns."""
+    key = (spark.sparkContext.applicationId, sf_dir, f"star/{name}")
     if key not in _DF_CACHE:
-        _DF_CACHE[key] = spark.read.parquet(dest)
+        _DF_CACHE[key] = stored(
+            spark,
+            sf_dir,
+            f"star/{name}",
+            sources,
+            _STAR_VERSION,
+            lambda: _star_columns(build()),
+            _star_layout,
+        )
     return _DF_CACHE[key]
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one testdata table, preferring the ingested multi-file
-    layout (parallel scans) over the raw single-row-group file.
-
-    ``SPARK_GRAFT_BUCKETED=1`` opt-in: the fact tables with a bucket
-    key (``_BUCKET_KEYS``) are served from the bucketed+sorted catalog
-    layout instead (``ingest_bucketed``) — every registry query that
-    joins lineitem⋈orders or self-joins lineitem then inherits the
-    co-located, exchange-free join on the bucket key. Row contents are
-    identical (same source rows, different file layout), so query
-    hashes are unchanged; bucket count via ``SPARK_GRAFT_BUCKETS``
-    (default ``_SPLIT_FILES``, and it must match across co-joined
-    tables — ``ingest_bucketed`` uses the same count for both)."""
-    bucketed = bool(os.environ.get("SPARK_GRAFT_BUCKETED")) and name in _BUCKET_KEYS
-    # The resolved bucket count is part of the cache key: a mid-session
-    # SPARK_GRAFT_BUCKETS change must not serve a DataFrame cached for
-    # the old count while ingest_bucketed registers a new table.
-    buckets = (
-        int(os.environ.get("SPARK_GRAFT_BUCKETS", _SPLIT_FILES)) if bucketed else 0
-    )
-    key = (spark.sparkContext.applicationId, sf_dir, name, bucketed, buckets)
+    layout (parallel scans) over the raw single-row-group file."""
+    key = (spark.sparkContext.applicationId, sf_dir, name)
     if key not in _DF_CACHE:
-        if bucketed:
-            df = spark.table(ingest_bucketed(spark, sf_dir, name, buckets))
-        else:
-            df = _load_plain(spark, sf_dir, name)
-        if name == "events":
-            # ingested copies written by older code may carry NTZ ts
-            df = _normalize_events_ts(df)
-        _DF_CACHE[key] = df
+        _DF_CACHE[key] = _ingested(spark, sf_dir, name)
     return _DF_CACHE[key]
 
 
@@ -310,53 +230,3 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register each testdata table as a temp view (for spark.sql plans)."""
     for t in TESTDATA_TABLES:
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
-# ---------------------------------------------------------------------------
-# Bucketed fact layout: the co-located-join path.
-# ---------------------------------------------------------------------------
-_BUCKET_ROOT = "/tmp/sparkgraft_bucketed"
-_BUCKET_KEYS = {
-    "lineitem": "l_orderkey",
-    "orders": "o_orderkey",
-}
-
-
-def bucketed_table_name(sf_dir: str, name: str, buckets: int) -> str:
-    import hashlib
-
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    return f"{name}_b{buckets}_{tag}"
-
-
-def ingest_bucketed(
-    spark: SparkSession, sf_dir: str, name: str, buckets: int = 32
-) -> str:
-    """Write one fact table bucketed (and sorted) by its join key and
-    register it in the session catalog; returns the table name.
-
-    This is the layout decision that deletes shuffles at 100 TB: a
-    bucketed+sorted table's join on the bucket key needs NO Exchange
-    and NO Sort on that side — orders⋈lineitem co-locate when both are
-    bucketed by orderkey with the same bucket count, and a lineitem
-    self-join (the q16 affinity shape) runs with zero exchanges.
-    Bucket count is the knob that keeps each bucket executor-sized as
-    the corpus grows (buckets ≈ data / target-partition-size; must
-    match across co-joined tables). Data lands as external parquet
-    under /tmp (session-independent); the catalog entry is per-session
-    (in-memory catalog) and is recreated idempotently by this call."""
-    key = _BUCKET_KEYS[name]
-    table = bucketed_table_name(sf_dir, name, buckets)
-    if spark.catalog.tableExists(table):
-        return table
-    # read the plain layout explicitly — under SPARK_GRAFT_BUCKETED,
-    # load_table routes back here
-    df = _load_plain(spark, sf_dir, name)
-    (
-        df.write.mode("overwrite")
-        .bucketBy(buckets, key)
-        .sortBy(key)
-        .option("path", f"{_BUCKET_ROOT}/{table}")
-        .saveAsTable(table)
-    )
-    return table

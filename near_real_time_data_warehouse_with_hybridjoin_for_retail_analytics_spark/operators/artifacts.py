@@ -6,8 +6,10 @@ those pipelines already materialized (the same contract as the
 persisted near-dup index in ``streaming/dedup_stream.py``). This module
 is that contract for batch consumers: ``materialized`` returns the
 parquet copy of a derived relation when one matching the corpus
-fingerprint exists, and otherwise builds it once (staging dir + atomic
-rename, safe under concurrent builders) and reads it back.
+fingerprint (``documents.parquet`` + pipeline version) exists, and
+otherwise builds it once and reads it back — through the same
+build-once store as the ingest re-layout and the star facts
+(``store.stored``).
 
 Reading back the parquet copy is value-exact: every artifact column is
 int/long/double/string, all of which round-trip parquet bit-for-bit,
@@ -22,27 +24,10 @@ from __future__ import annotations
 
 import os
 import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-_ARTIFACT_ROOT = "/tmp/sparkgraft_dedup_artifacts"
-
-
-def _corpus_fingerprint(sf_dir: str) -> str | None:
-    try:
-        st = os.stat(f"{sf_dir}/documents.parquet")
-    except OSError:
-        return None
-    return f"{st.st_size}:{int(st.st_mtime)}"
-
-
-def _marker_value(marker: str) -> str | None:
-    try:
-        with open(marker) as fh:
-            return fh.read().strip()
-    except OSError:
-        return None
+from ..store import stored
 
 
 def gc_stale_app_dirs(root: str, keep: str, max_age_s: int = 6 * 3600) -> None:
@@ -133,39 +118,4 @@ def materialized(
     serve old answers."""
     if os.environ.get("SPARK_GRAFT_NO_ARTIFACTS"):
         return build()
-    corpus = _corpus_fingerprint(sf_dir)
-    if corpus is None:
-        return build()
-    fingerprint = f"{corpus}:{version}"
-    sf_tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    dest = os.path.join(_ARTIFACT_ROOT, sf_tag, name)
-    marker = os.path.join(dest, "_ARTIFACT_OK")
-    if _marker_value(marker) == fingerprint:
-        return spark.read.parquet(dest)
-
-    df = build()
-    staging = f"{dest}__staging_{uuid.uuid4().hex[:8]}"
-    df.write.mode("overwrite").parquet(staging)
-    with open(os.path.join(staging, "_ARTIFACT_OK"), "w") as fh:
-        fh.write(fingerprint)
-    if _marker_value(marker) == fingerprint:
-        # A same-fingerprint builder finished while we were building:
-        # its dest is current and may already have readers mid-scan —
-        # keep it and discard our staging copy (value-identical).
-        shutil.rmtree(staging, ignore_errors=True)
-        return spark.read.parquet(dest)
-    if os.path.isdir(dest):
-        # stale fingerprint (corpus or pipeline changed) — replace
-        shutil.rmtree(dest, ignore_errors=True)
-    try:
-        os.rename(staging, dest)
-    except OSError:
-        shutil.rmtree(staging, ignore_errors=True)
-        # Rename fails when a racer won OR when the stale dest could
-        # not be removed (rmtree swallows errors). Serve dest only if
-        # its marker proves it current for THIS fingerprint; otherwise
-        # fall back to the in-memory plan — never a stale artifact.
-        if _marker_value(marker) == fingerprint:
-            return spark.read.parquet(dest)
-        return df
-    return spark.read.parquet(dest)
+    return stored(spark, sf_dir, f"artifacts/{name}", ("documents",), version, build)

@@ -2,8 +2,8 @@
 pruning.
 
 At 100 TB the cheapest query is the one that never reads the file:
-single-key pruning falls out of partitioning/bucketing (see
-``catalog.ingest_bucketed``), but a table queried by BOTH user and time
+single-key pruning falls out of range-partitioning on that key (see
+``catalog._RANGE_KEYS``), but a table queried by BOTH user and time
 needs a layout where every file is narrow in BOTH dimensions at once.
 Z-ordering (Morton, 1966 — the technique behind Delta Lake/Iceberg's
 ``OPTIMIZE ZORDER BY``) interleaves the bits of the two keys so that

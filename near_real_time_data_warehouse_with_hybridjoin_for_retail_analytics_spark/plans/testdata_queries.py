@@ -63,20 +63,12 @@ QTY = "l_quantity"
 # (catalog.ensure_star): the reference's ETL resolves every dimension
 # BEFORE queries.sql runs, so its queries never pay a fact-sized join
 # at query time — the testdata twins get the identical contract. The
-# join plans below are both the one-time ETL (``build``) and the
-# inline fallback when materialization is off (SPARK_GRAFT_NO_INGEST)
-# or the bucketed layout is active. Values are unchanged either way:
-# the star is the inner-join output itself, round-tripped through
-# parquet (original columns only, no computed floats).
-
-
-def _pref(f: DataFrame, name: str, fallback) -> "F.Column":
-    """Prefer a star-materialized derived column (v3: l_month,
-    l_weekend, l_date, l_cents — catalog.ensure_star) over inline
-    per-row derivation; the fallback keeps no-ingest and bucketed
-    modes correct. Identical values either way — the star stores the
-    very expression the fallback evaluates."""
-    return F.col(name) if name in f.columns else fallback
+# join plans below are the one-time ETL (``build``); ensure_star adds
+# the derived columns (l_year, l_month, l_weekend, l_date, l_cents and
+# the pre-cast measures), so the queries read them whether the star is
+# served from parquet or, when the store cannot serve a current copy,
+# inline. Values are the same either way: the star is the inner-join
+# output plus those exact expressions, round-tripped through parquet.
 
 
 def _fact_part(spark, sf_dir) -> DataFrame:
@@ -87,15 +79,14 @@ def _fact_part(spark, sf_dir) -> DataFrame:
         pt = load_table(spark, sf_dir, "part")
         return li.join(F.broadcast(pt), li.l_partkey == pt.p_partkey)
 
-    star = ensure_star(spark, sf_dir, "part", ("lineitem", "part"), build)
-    return star if star is not None else build()
+    return ensure_star(spark, sf_dir, "part", ("lineitem", "part"), build)
 
 
 def _fact_customer(spark, sf_dir) -> DataFrame:
     """lineitem ⋈ orders ⋈ broadcast(customer) ⋈ broadcast(nation),
     materialized once per corpus.
 
-    In the inline fallback, orders is deliberately NOT broadcast-
+    In ``build``, orders is deliberately NOT broadcast-
     hinted: it is a fact-sized table at scale; AQE picks broadcast at
     test scale on its own.
     """
@@ -111,14 +102,13 @@ def _fact_customer(spark, sf_dir) -> DataFrame:
             .join(F.broadcast(na), cu.c_nationkey == na.n_nationkey)
         )
 
-    star = ensure_star(
+    return ensure_star(
         spark,
         sf_dir,
         "customer",
         ("lineitem", "orders", "customer", "nation"),
         build,
     )
-    return star if star is not None else build()
 
 
 def _fact_supplier(spark, sf_dir) -> DataFrame:
@@ -133,19 +123,16 @@ def _fact_supplier(spark, sf_dir) -> DataFrame:
             F.broadcast(na), su.s_nationkey == na.n_nationkey
         )
 
-    star = ensure_star(
+    return ensure_star(
         spark, sf_dir, "supplier", ("lineitem", "supplier", "nation"), build
     )
-    return star if star is not None else build()
 
 
-def _latest_year(
-    df: DataFrame, spark: SparkSession, sf_dir: str, date_col: str = "l_shipdate"
-) -> DataFrame:
+def _latest_year(df: DataFrame, spark: SparkSession, sf_dir: str) -> DataFrame:
     """Filter to the max year — reference 'latest_year' CTE (queries.sql:32-38).
 
     The scalar is computed from the BARE lineitem table (a single
-    column-pruned scan of ``date_col``), exactly as the oracle SQL
+    column-pruned scan of ``l_shipdate``), exactly as the oracle SQL
     scopes it (``FROM lineitem``) — NOT from the already-joined star
     relation: Catalyst does not share subtrees, so deriving the scalar
     from ``df`` would scan and join the whole star twice.
@@ -161,16 +148,11 @@ def _latest_year(
     column is a static PartitionFilter: cold years never leave the
     file listing, at any scale.
     """
-    li = load_table(spark, sf_dir, "lineitem").select(date_col)
-    maxy = li.select(F.max(year_i(date_col))).collect()[0][0]
+    li = load_table(spark, sf_dir, "lineitem").select("l_shipdate")
+    maxy = li.select(F.max(year_i("l_shipdate"))).collect()[0][0]
     if maxy is None:
         return df.filter(F.lit(False))
-    ycol = (
-        F.col("l_year")
-        if date_col == "l_shipdate" and "l_year" in df.columns
-        else year_i(date_col)
-    )
-    return df.filter(ycol == F.lit(int(maxy)))
+    return df.filter(F.col("l_year") == F.lit(int(maxy)))
 
 
 _SQL_LATEST_YEAR = (
@@ -200,10 +182,8 @@ def q01(spark: SparkSession, sf_dir: str) -> DataFrame:
     f = _fact_part(spark, sf_dir)
     return (
         f.groupBy(
-            _pref(f, "l_month", month_i("l_shipdate")).alias("monthnum"),
-            _pref(f, "l_weekend", is_weekend("l_shipdate")).alias(
-                "is_weekend"
-            ),
+            F.col("l_month").alias("monthnum"),
+            F.col("l_weekend").alias("is_weekend"),
             F.col("p_brand").alias("brand"),
         )
         .agg(dsum(REV).alias("total_revenue"))
@@ -371,16 +351,9 @@ def q06(spark: SparkSession, sf_dir: str) -> DataFrame:
     if latest is None:
         df = df.filter(F.lit(False))
     else:
-        d = (
-            F.col("l_date")
-            if "l_date" in df.columns
-            else F.to_date("l_shipdate")
-        )
-        if "l_year" in df.columns:
-            df = df.filter(
-                F.col("l_year").between(F.lit(lo.year), F.lit(latest.year))
-            )
-        df = df.filter(d.between(F.lit(lo), F.lit(latest)))
+        df = df.filter(
+            F.col("l_year").between(F.lit(lo.year), F.lit(latest.year))
+        ).filter(F.col("l_date").between(F.lit(lo), F.lit(latest)))
     return (
         df.groupBy(F.col("n_name").alias("nation"), F.col("c_mktsegment").alias("segment"))
         .agg(dsum(REV).alias("total_revenue"), lsum(QTY).alias("total_units"))
@@ -673,8 +646,8 @@ def q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = (
         f.groupBy(
             F.col("l_suppkey").alias("sk"),
-            _pref(f, "l_year", year_i("l_shipdate")).alias("sale_year"),
-            _pref(f, "l_month", month_i("l_shipdate")).alias("monthnum"),
+            F.col("l_year").alias("sale_year"),
+            F.col("l_month").alias("monthnum"),
         )
         .agg(dsum(REV).alias("revenue"))
     )
@@ -837,12 +810,8 @@ def q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     f = _fact_part(spark, sf_dir)
     daily = f.groupBy(
         F.col("l_partkey").alias("partkey"),
-        _pref(f, "l_date", F.to_date("l_shipdate")).alias("sale_date"),
-    ).agg(
-        F.sum(
-            _pref(f, "l_cents", (dec(REV) * 10000).cast("long"))
-        ).alias("daily_c")
-    )
+        F.col("l_date").alias("sale_date"),
+    ).agg(F.sum("l_cents").alias("daily_c"))
     # Level 2 as a window over `daily` instead of a groupBy+join back:
     # one exchange to partkey (of already partially-aggregated daily
     # rows) replaces the stats aggregation AND the join re-shuffle of

@@ -1,11 +1,14 @@
-"""Race/failure semantics of the materialized-artifact store.
+"""Race/failure semantics of the build-once store (``store.stored``),
+shared by the materialized artifacts, the ingest re-layout and the
+star facts.
 
 The happy paths (disabled / cold-build / warm-read value equality) are
 covered by ``test_curation.py::test_dedup_report_artifact_store_roundtrip``;
-these tests pin the two racy edges: a same-fingerprint concurrent
+these tests pin the racy edges: a same-fingerprint concurrent
 builder must never have its freshly-written dest deleted out from
-under readers, and a failed rename must never serve a dest whose
-marker does not prove it current.
+under readers, a failed rename must never serve a dest whose
+marker does not prove it current, and a changed source must never be
+answered from the copy built from the old one.
 """
 
 from __future__ import annotations
@@ -15,6 +18,10 @@ import shutil
 
 import pytest
 
+from near_real_time_data_warehouse_with_hybridjoin_for_retail_analytics_spark import (
+    catalog,
+    store,
+)
 from near_real_time_data_warehouse_with_hybridjoin_for_retail_analytics_spark.operators import (
     artifacts,
 )
@@ -23,10 +30,10 @@ from near_real_time_data_warehouse_with_hybridjoin_for_retail_analytics_spark.op
 @pytest.fixture()
 def clean_store(sf_dir):
     sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    store = os.path.join(artifacts._ARTIFACT_ROOT, sf_tag)
-    shutil.rmtree(store, ignore_errors=True)
-    yield store
-    shutil.rmtree(store, ignore_errors=True)
+    artifact_dir = os.path.join(store._ROOT, sf_tag, "artifacts")
+    shutil.rmtree(artifact_dir, ignore_errors=True)
+    yield artifact_dir
+    shutil.rmtree(artifact_dir, ignore_errors=True)
 
 
 def _df(spark, vals):
@@ -38,8 +45,7 @@ def test_same_fingerprint_racer_dest_is_kept(spark, sf_dir, clean_store):
     our staging copy is discarded and THEIR dest is served — never
     rmtree'd (a concurrent reader may be mid-scan in it)."""
     name, version = "race_same_fp", "v1"
-    corpus = artifacts._corpus_fingerprint(sf_dir)
-    fingerprint = f"{corpus}:{version}"
+    fingerprint = store.fingerprint(sf_dir, ("documents",), version)
     dest = os.path.join(clean_store, name)
 
     def racer_wins_then_build():
@@ -53,7 +59,7 @@ def test_same_fingerprint_racer_dest_is_kept(spark, sf_dir, clean_store):
         spark, sf_dir, name, version, racer_wins_then_build
     )
     assert [r.x for r in out.collect()] == [111]  # the winner's copy
-    assert artifacts._marker_value(os.path.join(dest, "_ARTIFACT_OK")) == (
+    assert store._marker_value(os.path.join(dest, "_ARTIFACT_OK")) == (
         fingerprint
     )
     # staging was discarded, not left behind
@@ -84,8 +90,8 @@ def test_failed_rename_with_stale_dest_falls_back_to_inline(
     def fail_rename(src, dst):
         raise OSError("dest not empty")
 
-    monkeypatch.setattr(artifacts.shutil, "rmtree", keep_dest)
-    monkeypatch.setattr(artifacts.os, "rename", fail_rename)
+    monkeypatch.setattr(store.shutil, "rmtree", keep_dest)
+    monkeypatch.setattr(store.os, "rename", fail_rename)
     out = artifacts.materialized(
         spark, sf_dir, name, version, lambda: _df(spark, [7])
     )
@@ -98,8 +104,7 @@ def test_failed_rename_with_current_dest_serves_dest(
     """rename failing because a SAME-fingerprint racer won the last
     instant is fine — dest's marker proves it current, serve it."""
     name, version = "race_lost_rename", "v3"
-    corpus = artifacts._corpus_fingerprint(sf_dir)
-    fingerprint = f"{corpus}:{version}"
+    fingerprint = store.fingerprint(sf_dir, ("documents",), version)
     dest = os.path.join(clean_store, name)
 
     def fail_rename(src, dst):
@@ -109,11 +114,66 @@ def test_failed_rename_with_current_dest_serves_dest(
             fh.write(fingerprint)
         raise OSError("dest exists")
 
-    monkeypatch.setattr(artifacts.os, "rename", fail_rename)
+    monkeypatch.setattr(store.os, "rename", fail_rename)
     out = artifacts.materialized(
         spark, sf_dir, name, version, lambda: _df(spark, [43])
     )
     assert [r.x for r in out.collect()] == [42]
+
+
+def test_changed_source_rebuilds_the_ingested_copy(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """After a source parquet changes, load_table serves the new
+    file's rows: the stale ingested copy is removed before the rename,
+    not kept as if a concurrent ingester had won."""
+    testdata = os.path.dirname(sf_dir.rstrip("/"))
+    monkeypatch.setattr(store, "_ROOT", str(tmp_path / "store"))
+    monkeypatch.setattr(catalog, "_DF_CACHE", {})
+    sf = tmp_path / "sfx"
+    sf.mkdir()
+    src = sf / "orders.parquet"
+    shutil.copy(os.path.join(testdata, "sf0.01", "orders.parquet"), src)
+    old = catalog.load_table(spark, str(sf), "orders").count()
+
+    shutil.copy(os.path.join(testdata, "sf0.1", "orders.parquet"), src)
+    new = spark.read.parquet(str(src)).count()
+    assert new != old
+    catalog._DF_CACHE.clear()
+    assert catalog.load_table(spark, str(sf), "orders").count() == new
+
+
+def test_failed_rename_with_stale_star_serves_inline_derived_columns(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """When the star's rename fails over a stale dest, the inline frame
+    served instead carries the stored star's derived columns, so the
+    q01–q20 plans that read them still resolve."""
+    from near_real_time_data_warehouse_with_hybridjoin_for_retail_analytics_spark.plans import (
+        testdata_queries,
+    )
+
+    monkeypatch.setattr(store, "_ROOT", str(tmp_path))
+    monkeypatch.setattr(catalog, "_DF_CACHE", {})
+    dest = tmp_path / os.path.basename(sf_dir.rstrip("/")) / "star" / "part"
+    _df(spark, [999]).write.parquet(str(dest))
+    (dest / "_ARTIFACT_OK").write_text("stale:fingerprint")
+
+    real_rmtree = shutil.rmtree
+
+    def keep_dest(path, *a, **kw):  # the silently-failing rmtree
+        if os.path.abspath(path) == str(dest):
+            return None
+        return real_rmtree(path, *a, **kw)
+
+    def fail_rename(src, dst):
+        raise OSError("dest not empty")
+
+    monkeypatch.setattr(store.shutil, "rmtree", keep_dest)
+    monkeypatch.setattr(store.os, "rename", fail_rename)
+    columns = testdata_queries._fact_part(spark, sf_dir).columns
+    assert "x" not in columns  # not the stale copy
+    assert {"l_year", "l_month"} <= set(columns)
 
 
 def test_multimodal_components_artifact_roundtrip(spark, sf_dir):
@@ -127,8 +187,8 @@ def test_multimodal_components_artifact_roundtrip(spark, sf_dir):
     )
 
     sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    store = os.path.join(artifacts._ARTIFACT_ROOT, sf_tag)
-    shutil.rmtree(store, ignore_errors=True)
+    artifact_dir = os.path.join(store._ROOT, sf_tag, "artifacts")
+    shutil.rmtree(artifact_dir, ignore_errors=True)
 
     def labels():
         return sorted(
@@ -144,10 +204,10 @@ def test_multimodal_components_artifact_roundtrip(spark, sf_dir):
     finally:
         del os.environ["SPARK_GRAFT_NO_ARTIFACTS"]
     built = labels()  # cold store: builds embedding_pairs + reads back
-    assert os.path.isdir(os.path.join(store, "embedding_pairs"))
+    assert os.path.isdir(os.path.join(artifact_dir, "embedding_pairs"))
     served = labels()  # warm store: pure parquet read
     assert inline == built == served
-    shutil.rmtree(store, ignore_errors=True)
+    shutil.rmtree(artifact_dir, ignore_errors=True)
 
 
 def test_renew_lease_touches_app_dir(tmp_path):

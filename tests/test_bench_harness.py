@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import importlib
 import json
+import os
 import tempfile
 import types
 from pathlib import Path
@@ -42,6 +43,7 @@ class Harness:
         self.group = None
         self.jobs: dict[str, list[int]] = {}
         self.runs: dict[str, int] = {}
+        self.no_artifacts: set = set()
         self.sparkContext = self
 
     # --- clock -----------------------------------------------------
@@ -77,6 +79,7 @@ class Harness:
         def build(spark, sf_dir):
             assert spark is self
             self.log.append(("build", name, Path(sf_dir).name))
+            self.no_artifacts.add(os.environ.get("SPARK_GRAFT_NO_ARTIFACTS"))
             return self._frame(name)
 
         return build
@@ -124,6 +127,9 @@ def harness(monkeypatch, tmp_path):
     monkeypatch.setenv("SPARK_GRAFT_SF_DIR", str(tmp_path / "sf0.01"))
     monkeypatch.setenv("SPARK_GRAFT_BENCH_RUNS", "3")
     monkeypatch.delenv("SPARK_GRAFT_BENCH_DETAIL", raising=False)
+    # recorded as set, so teardown removes the value bench.main() sets
+    monkeypatch.setenv("SPARK_GRAFT_NO_ARTIFACTS", "")
+    monkeypatch.delenv("SPARK_GRAFT_NO_ARTIFACTS")
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     monkeypatch.setattr(bench, "time", h)
     monkeypatch.setattr(bench, "get_spark", lambda app: h)
@@ -266,6 +272,26 @@ def test_filtered_run_times_matches_only_and_writes_outside_repo(
     # the filter leaves the warm-up as it is
     warm = log[: _pass_starts(log, 1)[0]]
     assert [ev[1:] for ev in warm if ev[0] == "build"] == WARM_UP
+
+
+def test_run_times_artifact_consumers_cold(harness, capsys, monkeypatch, tmp_path):
+    """Every warm-up and timed build runs with the artifact store off,
+    the detail says so, and materialized() then returns the inline
+    build instead of reading or writing a stored copy."""
+    from near_real_time_data_warehouse_with_hybridjoin_for_retail_analytics_spark.operators import (
+        artifacts,
+    )
+
+    detail_path = tmp_path / "detail.json"
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_DETAIL", str(detail_path))
+    _run(capsys, [])
+    assert harness.no_artifacts == {"1"}
+    assert json.loads(detail_path.read_text())["artifact_store"] == "off"
+
+    sf = tmp_path / "sf0.01"
+    (sf / "documents.parquet").write_bytes(b"")  # the fingerprinted source
+    inline = object()  # has no .write: any store write would raise
+    assert artifacts.materialized(None, str(sf), "x", "v1", lambda: inline) is inline
 
 
 def test_filter_matching_nothing_exits_before_spark(monkeypatch):

@@ -101,12 +101,12 @@ def test_dedup_report_artifact_store_roundtrip(spark, sf_dir, monkeypatch):
     import os
     import shutil
 
-    from near_real_time_data_warehouse_with_hybridjoin_for_retail_analytics_spark.operators import (
-        artifacts,
+    from near_real_time_data_warehouse_with_hybridjoin_for_retail_analytics_spark.store import (
+        _ROOT,
     )
 
     sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    store = os.path.join(artifacts._ARTIFACT_ROOT, sf_tag)
+    store = os.path.join(_ROOT, sf_tag, "artifacts")
     shutil.rmtree(store, ignore_errors=True)
 
     def report_rows():
