@@ -15,10 +15,12 @@ minimum is reported: this host shows multi-second noisy-neighbor CPU
 bursts, and min-of-N measures the engine rather than the neighbor. Set
 ``SPARK_GRAFT_BENCH_RUNS=1`` for a single-pass run.
 
-The run sets ``SPARK_GRAFT_NO_ARTIFACTS=1``: an entry that reads
-``operators.artifacts.materialized`` times the build of what it reads,
-not a parquet copy an earlier pass or run left behind. The detail file
-records this as ``"artifact_store": "off"``.
+Every build the harness runs, warm-up or timed, goes through
+``run_query``, which sets ``SPARK_GRAFT_NO_ARTIFACTS=1`` first: an
+entry that reads ``operators.artifacts.materialized`` times the build
+of what it reads, not a parquet copy an earlier pass or run left
+behind, in this tool and in the tools that share its harness. The
+detail file records this as ``"artifact_store": "off"``.
 
 Every entry runs under its own Spark job group; once its timer stops,
 the job/stage/task counts the status tracker holds for that group go
@@ -84,7 +86,8 @@ SHARED_STAGING = (
 
 def run_query(fn, *args, **kwargs) -> float:
     """Seconds to build ``fn(*args, **kwargs)`` and force it through the
-    ``noop`` sink."""
+    ``noop`` sink, with the artifact store off."""
+    os.environ["SPARK_GRAFT_NO_ARTIFACTS"] = "1"
     t0 = time.time()
     fn(*args, **kwargs).write.format("noop").mode("overwrite").save()
     return time.time() - t0
@@ -193,7 +196,6 @@ def main(argv: list[str] | None = None) -> None:
         sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
     except ValueError:
         sf = None
-    os.environ["SPARK_GRAFT_NO_ARTIFACTS"] = "1"
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -24,6 +24,7 @@ from . import (  # noqa: F401
 from ..streaming import (  # noqa: F401  (registers etl_* stream twins)
     dedup_stream,
     interval_join,
+    sessions,
     windows,
 )
 

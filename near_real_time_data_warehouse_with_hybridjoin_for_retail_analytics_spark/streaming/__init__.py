@@ -1,8 +1,8 @@
 """Structured Streaming: the HYBRIDJOIN-parity enrichment pipeline and
 watermarked windowed rollups.
 
-Importing this package registers the batch-equivalent streaming queries
-(etl_events_hourly).
+Importing this package loads none of its modules, so a caller of
+``streaming.hybrid_join`` does not pull in the catalog or the store.
+The streaming twins of registry queries (``sessions``, ``windows``, …)
+are registered by ``operators``.
 """
-
-from . import sessions, windows  # noqa: F401

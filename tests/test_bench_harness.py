@@ -10,6 +10,7 @@ from __future__ import annotations
 import importlib
 import json
 import os
+import sys
 import tempfile
 import types
 from pathlib import Path
@@ -292,6 +293,31 @@ def test_run_times_artifact_consumers_cold(harness, capsys, monkeypatch, tmp_pat
     (sf / "documents.parquet").write_bytes(b"")  # the fingerprinted source
     inline = object()  # has no .write: any store write would raise
     assert artifacts.materialized(None, str(sf), "x", "v1", lambda: inline) is inline
+
+
+def test_scale_study_times_artifact_consumers_cold(
+    harness, capsys, monkeypatch, tmp_path
+):
+    """tools/scale_study.py runs its warm-up and timed builds through
+    bench.py's harness, so it too times them with the store off."""
+    from tools import scale_study
+
+    sfs = [str(tmp_path / "sf0.001"), str(tmp_path / "sf0.01")]
+    monkeypatch.setattr(scale_study, "get_spark", lambda app: harness)
+    monkeypatch.setattr(scale_study, "ENTRIES", ["dedup_simhash", "etl_enrich_events"])
+    monkeypatch.setattr(scale_study, "SF_DIRS", sfs)
+    monkeypatch.setattr(scale_study, "SF1_DIR", str(tmp_path / "sf1"))
+    monkeypatch.setattr(
+        sys, "argv", ["scale_study.py", "--runs", "1", "--out", str(tmp_path / "s.json")]
+    )
+    scale_study.main()
+    # warm-up at the smallest sf, then one timed pass per sf
+    assert [ev[1:] for ev in harness.log if ev[0] == "build"] == [
+        (name, sf)
+        for sf in ("sf0.001", "sf0.001", "sf0.01")
+        for name in ("dedup_simhash", "etl_enrich_events")
+    ]
+    assert harness.no_artifacts == {"1"}
 
 
 def test_filter_matching_nothing_exits_before_spark(monkeypatch):

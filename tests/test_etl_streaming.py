@@ -13,6 +13,8 @@ Structured Streaming pipeline and asserts:
 from __future__ import annotations
 
 import shutil
+import subprocess
+import sys
 import tempfile
 from decimal import Decimal
 from pathlib import Path
@@ -670,3 +672,34 @@ def test_fact_time_travel_on_batch_boundaries(spark, dims, tmp_path):
         hj.fact_table_asof(spark, out, 1)
     _os.rename(victim + ".compacted-away", victim)  # restore
     assert hj.fact_table_asof(spark, out, 1).count() == n1
+
+
+PKG = "near_real_time_data_warehouse_with_hybridjoin_for_retail_analytics_spark"
+
+
+def _fresh(code: str) -> str:
+    """stdout of ``code`` run in a fresh interpreter at the repo root."""
+    root = Path(__file__).resolve().parent.parent
+    return subprocess.run(
+        [sys.executable, "-c", code], cwd=root, check=True, capture_output=True, text=True
+    ).stdout
+
+
+def test_pipeline_import_loads_no_catalog_and_operators_register_stream_twins():
+    """Importing the enrichment pipeline loads neither the catalog nor
+    the store; importing ``operators`` still registers the streaming
+    twins of the registry queries."""
+    loaded = _fresh(
+        f"import sys, {PKG}.streaming.hybrid_join\n"
+        f"print(sorted(m for m in sys.modules if m.startswith('{PKG}.')))"
+    )
+    assert f"{PKG}.streaming.hybrid_join" in loaded
+    assert f"{PKG}.catalog" not in loaded
+    assert f"{PKG}.store" not in loaded
+    names = _fresh(
+        f"import {PKG}.operators\n"
+        f"from {PKG}.plans.registry import QUERIES\n"
+        "print(sorted(QUERIES))"
+    )
+    assert "'etl_user_sessions'" in names
+    assert "'etl_events_hourly'" in names

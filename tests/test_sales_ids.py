@@ -1,14 +1,18 @@
 """Sales-id assignment (S10) and the dimension defaults it relies on.
 
-``assign_sales_ids`` persists and counts a batch, then numbers it with
-``row_number()`` over one window ordered by the id-order key. These
-tests pin the plan shape (no range shuffle, one window, no driver-built
-table joined back), the numbering against a single-window reference,
-and the sink's behaviour when a whole batch is dropped before numbering.
+Ids are ``row_number()`` over one window ordered by the id-order key,
+plus the running offset. ``assign_sales_ids`` (the batch callers' form)
+persists and counts a batch first; the streaming sink instead numbers
+the batch lazily and takes its row count from the write. These tests
+pin the plan shape (no range shuffle, one window, no driver-built table
+joined back), the numbering against a single-window reference, the
+sink's one-pass numbering, and the sink's behaviour when a whole batch
+is dropped before numbering.
 """
 
 from __future__ import annotations
 
+import os
 import re
 from decimal import Decimal
 
@@ -112,7 +116,7 @@ PRODUCTS = [("P001", "Toys", Decimal("10.50"), 3, 2), ("P002", "Tools", Decimal(
 SCHEMA = "orderID string, Customer_ID string, Product_ID string, quantity string, date string"
 
 
-def test_all_dropped_batch_commits_and_next_ids_start_at_one(spark, tmp_path):
+def _dims(spark):
     cust = spark.createDataFrame(
         CUSTOMERS,
         "customer_id long, gender string, age_group string, occupation int, "
@@ -123,6 +127,11 @@ def test_all_dropped_batch_commits_and_next_ids_start_at_one(spark, tmp_path):
         "product_id string, product_category string, price decimal(12,2), "
         "store_id long, supplier_id long",
     )
+    return cust, prod
+
+
+def test_all_dropped_batch_commits_and_next_ids_start_at_one(spark, tmp_path):
+    cust, prod = _dims(spark)
     inp, out, ckpt = tmp_path / "in", str(tmp_path / "sales"), str(tmp_path / "ckpt")
     inp.mkdir()
 
@@ -157,6 +166,63 @@ def test_all_dropped_batch_commits_and_next_ids_start_at_one(spark, tmp_path):
     ]
     ids = sorted(r.sales_id for r in spark.read.parquet(out).collect())
     assert ids == list(range(1, n + 1))
+
+
+def test_sink_numbers_each_batch_without_persist_or_count(
+    spark, tmp_path, monkeypatch
+):
+    """The sink runs no separate count pass and caches nothing: with
+    ``persist`` and ``count`` raising, three files (the middle one
+    entirely J1-dropped) still commit as three batches whose ids are
+    contiguous per batch and 1..N overall."""
+    cust, prod = _dims(spark)
+    inp, out, ckpt = tmp_path / "in", str(tmp_path / "sales"), str(tmp_path / "ckpt")
+    inp.mkdir()
+    header = "orderID,Customer_ID,Product_ID,quantity,date\n"
+    kept = {"a.csv": 310, "c.csv": 125}
+    for k, (name, n) in enumerate(kept.items()):
+        (inp / name).write_text(
+            header
+            + "".join(
+                f"{k}{i:04d},{1000001 + i % 10},P00{1 + i % 2},{1 + i % 3},2017-03-04\n"
+                for i in range(n)
+            )
+        )
+    (inp / "b.csv").write_text(
+        header + "".join(f"{i},9{i:06d},P001,1,2017-03-04\n" for i in range(40))
+    )
+
+    def boom(*_args, **_kwargs):
+        raise AssertionError("the sink must not persist or count a batch")
+
+    frame = type(spark.range(1))
+    with monkeypatch.context() as m:
+        m.setattr(frame, "persist", boom)
+        m.setattr(frame, "count", boom)
+        q = hj.run_stream(
+            spark, str(inp), SCHEMA, cust, prod, output_dir=out, checkpoint_dir=ckpt
+        )
+        q.awaitTermination(120)
+        q.writer_token.release()
+
+    assert [(s["batch_id"], s["state"]) for s in hj.fact_snapshots(out)] == [
+        (0, "moved"),
+        (1, "moved"),
+        (2, "moved"),
+    ]
+    total = sum(kept.values())
+    ids = sorted(r.sales_id for r in spark.read.parquet(out).collect())
+    assert ids == list(range(1, total + 1))
+
+    # each batch's ids are one contiguous range, following the last batch's
+    sizes, end = [], 0
+    for _bid, manifest in hj._manifests(out):
+        paths = [os.path.join(out, f) for f in manifest["files"]]
+        got = sorted(r.sales_id for r in spark.read.parquet(*paths).collect()) if paths else []
+        assert got == list(range(end + 1, end + len(got) + 1))
+        end += len(got)
+        sizes.append(len(got))
+    assert sorted(sizes) == sorted([0, *kept.values()])
 
 
 def test_default_store_and_supplier_rows_appear_once(spark, tmp_path):

@@ -8,8 +8,9 @@ scheduling), e ≈ 1 means linear data work, e > 1 superlinear (a red
 flag unless the operator is a labeled quadratic truth baseline).
 
 Timing uses bench.py's harness (shared staging, per-pass reset, noop
-timer, min-of-N pass loop); its warm-up is every studied entry at the
-smallest sf, and each sf starts from reset caches like every pass.
+timer with the artifact store off, min-of-N pass loop); its warm-up is
+every studied entry at the smallest sf, and each sf starts from reset
+caches like every pass.
 
 Usage: python tools/scale_study.py [--runs 2] [--out SCALE_STUDY.json]
 """
@@ -83,9 +84,9 @@ ENTRIES = [
     # + rewrite → expect e ≈ 1 data-bound with a job-overhead floor),
     # the metadata-only tombstone view (probe linear in the death
     # rate), the compressed-path image hash (inflate+defilter per row,
-    # e ≈ 1 kernel-bound), and the one-entry data card (reads
-    # materialized summaries → expect a flat artifact-read floor once
-    # the store is warm; cold-build cost belongs to the producers).
+    # e ≈ 1 kernel-bound), and the one-entry data card (the harness
+    # keeps the artifact store off, so it builds the summaries it
+    # reads).
     "layout_compaction_apply",
     "ann_delete_assignments",
     "dedup_phash_png",
